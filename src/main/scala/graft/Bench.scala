@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** Which round a full-suite artifact belongs to: the env var wins; else
@@ -208,11 +209,13 @@ object Bench {
     // cross-round comparison loses the front half — persist the FULL
     // per-query map as an artifact too (only for full-suite runs; a
     // targeted subset re-measure must not overwrite the round record).
+    // The checkout root is the working directory (sbt's forked `run`).
     if (args.isEmpty) try {
-      val dir = new java.io.File("/root/repo/bench")
+      val root = new java.io.File(System.getProperty("user.dir"))
+      val dir = new java.io.File(root, "bench")
       dir.mkdirs()
       persistFile(sys.env.get("SPARK_GRAFT_ROUND"),
-        Option(new java.io.File("/root/repo").listFiles).toSeq.flatten
+        Option(root.listFiles).toSeq.flatten
           .map(_.getName),
         Option(dir.listFiles).toSeq.flatten.map(_.getName),
         stamp = System.currentTimeMillis.toString) match {
@@ -227,7 +230,9 @@ object Bench {
           System.err.println(
             "bench: round undeterminable (no SPARK_GRAFT_ROUND, no BENCH_r* files) — not persisting artifact")
       }
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) => System.err.println(s"bench: persisting the artifact failed: $e")
+    }
     println(line)
     spark.stop()
   }

@@ -32,6 +32,14 @@ object GraftSession {
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
       if (dirs.nonEmpty) b.config("spark.local.dir", dirs.mkString(","))
     }
+    // The `file:` scheme goes to graft.LocalFs. Without libhadoop
+    // (NativeIO unavailable), Hadoop's local filesystem forks `chmod` for
+    // every file it creates and `readlink` on every FileContext rename:
+    // several forks per checkpoint file (the file, its `.crc`, both ends
+    // of the rename), most of a trigger's offset, commit and state-store
+    // commit time. LocalFs does both in-process with the same modes,
+    // `.crc` files and rename semantics.
+    LocalFs.hadoopConf.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     b
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
     .config("spark.sql.session.timeZone", "UTC")
@@ -71,6 +79,17 @@ object GraftSession {
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
     .config("spark.sql.parquet.filterPushdown", "true")
+    // Tungsten page size. Spark's default is the execution pool / cores /
+    // 16 rounded up to a power of two (16 MB at a 3 GB heap, up to 64 MB),
+    // and a hash aggregate or sorter takes a whole page before its first
+    // row. A streaming trigger or a short query holds a few MB per task,
+    // so most of each page is empty; pages a young collection finds live
+    // overflow the survivor space into the old generation, and how many
+    // it finds depends on timing. With the default, the npm-stream
+    // benchmark's peak RSS varied 1764-2009 MB across runs (4-core VM,
+    // 3 GB heap); with 2 MB pages it is 1576-1634 MB. A task can still
+    // hold 8192 pages (16 GB), and a record larger than a page gets its own.
+    .config("spark.buffer.pageSize", "2m")
     // Reliable-checkpoint hygiene (the Lineage.truncate production mode):
     // without this, checkpoint data written under spark.graft.checkpointDir
     // is NEVER reclaimed — every iteration of a long iterative job (BPE's

@@ -144,6 +144,9 @@ object Registry {
 
   /** Enrich a `line`/`name` DataFrame of package names through a client,
     * one client per partition (the Spark analog of a pooled connection).
+    * Blank names are skipped: they name no package (an HTTP client would
+    * GET the registry root), and skipping them here keeps a stream over a
+    * raw line source equal to the batch form over `GzipLines.read`.
     */
   def enrichWithClient(names: DataFrame, client: RegistryClient,
                        nameCol: String = "line"): DataFrame = {
@@ -152,7 +155,8 @@ object Registry {
     val fetched = names.select(col(nameCol).as("name")).as[String]
       .mapPartitions { it =>
         // client is constructed/deserialized once per partition
-        it.flatMap(n => client.fetch(n).map(body => (n, body)))
+        it.filter(n => n != null && !n.isBlank)
+          .flatMap(n => client.fetch(n).map(body => (n, body)))
       }
       .toDF("name", "body")
     parseMetadata(fetched)

@@ -99,9 +99,8 @@ class NpmPipelineSpec extends AnyFunSuite {
     assert(viaSnapshot.exceptAll(viaClient).count() === 0L)
   }
 
-  test("reads the reference's own packages.txt.gz input format") {
-    val p = "/root/reference/src/main/resources/packages.txt.gz"
-    assume(new java.io.File(p).exists())
+  test("reads the reference's packages.txt.gz input format") {
+    val p = Fixtures.packages
     val names = graft.sources.GzipLines.read(spark, p)
     assert(names.count() > 0L)
     assert(names.filter(col("line").contains(" ")).count() === 0L) // one name per line

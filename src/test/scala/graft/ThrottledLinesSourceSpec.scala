@@ -91,8 +91,8 @@ class ThrottledLinesSourceSpec extends AnyFunSuite {
     throw last
   }
 
-  test("reads the reference's packages.txt.gz through the custom source") {
-    val p = "/root/reference/src/main/resources/packages.txt.gz"
+  test("reads a packages.txt.gz in the reference's format through the custom source") {
+    val p = Fixtures.packages
     val (name, _) = runAvailableNow(p, perTrigger = 2)
     val streamed = spark.table(name).as[(Long, String)].collect().map(_._2).toSeq
     val batch = graft.sources.GzipLines.read(spark, p).as[String].collect().toSeq
