@@ -55,7 +55,7 @@ object StreamOps {
           t.resolve(s"$table.parquet"))
         t.toString
       })
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.schemaOf(s, path)
     s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
   }
 
@@ -106,7 +106,7 @@ object StreamOps {
                                 maxFilesPerTrigger: Int): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = pacedDir(s, s"$d/events.parquet", nFiles)
-    val schema = s.read.parquet(dir).schema
+    val schema = graft.Tables.schemaOf(s, dir)
     val raw = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
     graft.Tables.withEventTs(raw)
@@ -835,7 +835,7 @@ object StreamOps {
     recoverCorpusCompacting(s, d)
     val minAgree = math.max(0, math.ceil((tau - 0.25) * Dedup.MinhashPerms).toInt)
     val dir = pacedDir(s, s"$d/documents.parquet", nFiles)
-    val schema = s.read.parquet(dir).schema
+    val schema = graft.Tables.schemaOf(s, dir)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val OvrKey = "spark.sql.sources.partitionOverwriteMode"
     val prevOvr = s.conf.get(OvrKey)
