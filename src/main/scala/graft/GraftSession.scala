@@ -115,11 +115,6 @@ object GraftSession {
       math.max(4000,
         sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").map(_.toInt).getOrElse(4000)).toString)
     .config("spark.ui.enabled", "false")
-    // The dedup index-vs-recompute dial (DedupIndex.useIndex), env-
-    // surfaced so Bench / Verify / plan dumps can measure BOTH forms of
-    // one build (the round-11 before/after evidence runs). Default on.
-    .config("spark.graft.dedup.useIndex",
-      sys.env.getOrElse("SPARK_GRAFT_DEDUP_INDEX", "true"))
   }
 
   /** Local session for tests / ad-hoc runs. */

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for ITERATIVE operators (PageRank rounds, BPE merge
   * loops, label propagation, Lloyd's k-means): each round must cut the
@@ -62,27 +64,44 @@ object Lineage {
     * unchanged (it already writes to the checkpoint filesystem).
     */
   def truncateTo(df: DataFrame,
-                 level: org.apache.spark.storage.StorageLevel): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get(NoTruncateKey, "false") == "true") return df
-    s.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(_) => truncate(df)
-      case None => df.localCheckpoint(eager = true, storageLevel = level)
+                 level: StorageLevel): DataFrame =
+    if (noTruncate.value) df
+    else if (reliable(df.sparkSession)) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true, storageLevel = level)
+
+  /** Plan-dump scope: inside [[untruncated]] every truncate is a no-op,
+    * so `explain` shows the FULL logical pipeline instead of `Scan
+    * ExistingRDD` stubs. Scoped to the calling thread and the threads it
+    * starts, never a session setting: iterative operators run outside it
+    * would re-execute their whole lineage per round. Only
+    * [[PlanFormatted]] enters it.
+    */
+  private val noTruncate = new scala.util.DynamicVariable[Boolean](false)
+
+  def untruncated[A](body: => A): A = noTruncate.withValue(true)(body)
+
+  def truncate(df: DataFrame): DataFrame =
+    truncateTo(df, localLevel(df.sparkSession))
+
+  /** RDD form of [[truncate]], for iterative loops written on RDDs: marks
+    * `rdd` for the same reliable or local checkpoint, taken by the first
+    * job that computes it (persisted first, so a reliable checkpoint's
+    * write reads the blocks instead of recomputing them).
+    */
+  def truncate[T](s: SparkSession, rdd: RDD[T]): RDD[T] = {
+    if (!noTruncate.value) {
+      rdd.persist(localLevel(s))
+      if (reliable(s)) rdd.checkpoint() else rdd.localCheckpoint()
     }
+    rdd
   }
 
-  /** Plan-dump escape hatch: `spark.graft.lineage.noTruncate=true` makes
-    * every truncate a no-op so `explain` shows the FULL logical pipeline
-    * instead of `Scan ExistingRDD` stubs (round-10 advice: the dumped
-    * evidence for iterative/truncating queries was uninformative). Never
-    * set during real execution — iterative operators would re-execute
-    * their whole lineage per round.
-    */
-  val NoTruncateKey = "spark.graft.lineage.noTruncate"
+  private def localLevel(s: SparkSession): StorageLevel =
+    StorageLevel.fromString(s.conf.get(StorageKey, "MEMORY_AND_DISK_SER"))
 
-  def truncate(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get(NoTruncateKey, "false") == "true") return df
+  /** Whether `spark.graft.checkpointDir` is set; if so, the context's
+    * checkpoint dir points into it. */
+  private def reliable(s: SparkSession): Boolean =
     s.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = s.sparkContext
@@ -105,11 +124,7 @@ object Lineage {
         val currentParent = sc.getCheckpointDir.flatMap(cd =>
           Option(new org.apache.hadoop.fs.Path(cd).getParent).map(qualified))
         if (!currentParent.contains(target)) sc.setCheckpointDir(dir)
-        df.checkpoint(eager = true)
-      case None =>
-        val level = org.apache.spark.storage.StorageLevel.fromString(
-          s.conf.get(StorageKey, "MEMORY_AND_DISK_SER"))
-        df.localCheckpoint(eager = true, storageLevel = level)
+        true
+      case None => false
     }
-  }
 }

@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   * Mostly planning-only, with two caveats: queries that call
   * Lineage.truncate during CONSTRUCTION would eagerly execute their
   * upstream pipeline and dump a collapsed `Scan ExistingRDD` stub, so
-  * truncation is disabled for the dump session (Lineage.NoTruncateKey —
-  * round-10 advice; iterative queries then show their full per-round
+  * the dumps are planned inside Lineage.untruncated (round-10 advice;
+  * iterative queries then show their full per-round
   * lineage), and index-probing queries still run their self-healing
   * index build on first touch of a data dir.
   *
@@ -31,9 +31,8 @@ object PlanFormatted {
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(Lineage.NoTruncateKey, "true")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
+    Lineage.untruncated(names.foreach { name =>
       val txt =
         try SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(
@@ -42,7 +41,7 @@ object PlanFormatted {
           s"PLANNING FAILED: ${e.getClass.getName}: ${e.getMessage}\n" }
       Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"),
         s"== $name (sf=$sfDir, explain formatted) ==\n" + txt)
-    }
+    })
     spark.stop()
     println(s"[plan-formatted] wrote ${names.size} plans to $outDir (tag=$tag)")
   }

@@ -27,10 +27,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema from [[schemaOf]]. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schemaOf(spark, path)).parquet(path)
-  }
 
   /** A path's leaf files (path, length, modification time) and the
     * session's inference settings. */

@@ -24,36 +24,20 @@ object Dedup {
     * verified with the EXACT char-gram Jaccard, so at the operating point
     * (true pairs ≫ τ) the output equals the exhaustive computation.
     */
-  def charNgramJaccard(s: SparkSession, d: String, tau: Double = 0.6): DataFrame = {
-    // Index probe (default): char-gram features are the engine's largest
-    // exploded tables, so reading them from the persisted bucketed layout
-    // (DedupIndex: offline write-once work) instead of re-extracting them
-    // from corpus text per run is the biggest single §6 reuse win — the
-    // candidate self-join AND the verification joins plan zero index-side
-    // exchange. Recompute twin below (dial; spec-pinned row-identical).
-    if (DedupIndex.useIndex(s)) {
-      DedupIndex.ensureChar(s, d)
-      indexedLshPairs(tau,
-        bands = s.table(DedupIndex.tbl("cbands", d)),
-        sig = s.table(DedupIndex.tbl("csig", d)),
-        exD = s.table(DedupIndex.tbl("cshd", d)),
-        sizes = s.table(DedupIndex.tbl("csizes", d)))
-    } else {
-      val ex = charShinglesOf(Tables.documents(s, d))
-      // signatures come row-local (CharGramMinhash, bit-identical to the
-      // 64-min-agg over ex — spec-asserted); ex stays for verification.
-      minhashLshPairs(ex, tau, Some(signaturesRowLevelChar(
-        Tables.documents(s, d), 5, 2)),
-        materializeEx = materializeShingles(s, d))
-    }
-  }
+  def charNgramJaccard(s: SparkSession, d: String, tau: Double = 0.6): DataFrame =
+    // Char-gram features are the engine's largest exploded tables, so they
+    // are read from the persisted bucketed layout (DedupIndex: offline
+    // write-once work) instead of being re-extracted from corpus text per
+    // run: the candidate self-join AND the verification joins plan zero
+    // index-side exchange.
+    selfPairs(Features.indexed(s, d, Features.CharGrams), tau).orderBy("a", "b")
 
   /** Char 5-gram stride-2 w-shingling: every 2nd gram position — half the
     * shingle volume, same near-dup separation (dups share the strided set
     * too). ROW-LOCAL like shinglesOf: in-array gram hashes →
     * array_distinct → explode (h is doc-keyed, so per-doc distinct ≡ a
     * global `.distinct()`), removing the engine's largest distinct
-    * exchange. Shared by the q57 recompute path and the DedupIndex build.
+    * exchange. The shingles of [[Features.char]].
     */
   private[graft] def charShinglesOf(docs: DataFrame, n: Int = 5): DataFrame =
     docs
@@ -73,43 +57,76 @@ object Dedup {
         (0 until MinhashPerms).map(i => col("sig").getItem(i).as(s"m$i")): _*)
   }
 
-  /** Resolve near-dup PAIRS into clusters by iterative min-label
-    * propagation (each node adopts the smallest representative among
-    * itself and its neighbors). Dup clusters are tiny and near-cliques,
-    * so this converges in a handful of iterations; each iteration is one
-    * join + one aggregate on the (small) pair set, never on the corpus.
-    * Returns (doc_id, rep) for every doc that appears in a pair.
+  /** Resolve near-dup PAIRS into clusters: connected components, each
+    * labelled with its smallest member. Returns (doc_id, rep) for every
+    * doc that appears in a pair.
+    *
+    * A round has three steps over the current labels `rep`:
+    *  1. propagate: each node takes the smallest label among itself and
+    *     its neighbours (`hop`);
+    *  2. hook: each node's label node `rep(x)` also takes the smallest
+    *     `hop` of the nodes labelled with it;
+    *  3. jump: each node takes its label node's new label
+    *     (`rep := rep(rep)`).
+    * Propagation alone moves a label one hop per round, so a long
+    * near-dup chain (templated pages, successive versions of one
+    * document) needs as many rounds as its diameter. Jumping alone does
+    * not fix that: on a path with shuffled ids the local minima keep
+    * their own labels, and a label still crosses them one hop per round.
+    * Hooking moves the better label to the local minimum the nodes point
+    * at, and jumping spreads it back, so a path of n nodes settles in
+    * about log2(n) rounds whatever its id order. The loop runs until a
+    * round changes no label; then every label is its component minimum.
+    * `maxRounds` is only a guard, and reaching it throws. A round runs on
+    * the (small) pair set, never on the corpus.
     */
-  def resolveClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // materialize the (small) edge set once — otherwise every iteration
-    // re-executes the whole upstream pair-generation pipeline
-    val edges = graft.Lineage.truncate(
-      pairs.select(col("a").as("x"), col("b").as("y"))
-        .unionByName(pairs.select(col("b").as("x"), col("a").as("y"))))
-    var labels = edges.select(col("x").as("doc_id")).distinct()
-      .withColumn("rep", col("doc_id"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "y2"), col("y") === col("y2"))
-        .groupBy(col("x").as("doc_id"))
-        .agg(min(col("rep")).as("nrep"))
-      // Carry the previous label through the update so convergence is a
-      // FILTER on the already-truncated result: the earlier form ran the
-      // join+agg pipeline twice per iteration (once under the separate
-      // changed-check join, once again under truncate) — cut the lineage
-      // first, then read the materialized blocks for both the check and
-      // the next iteration's labels.
-      val updated = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("rep").as("prev"),
-          least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
-      val mat = graft.Lineage.truncate(updated) // cut the iterative lineage
-      converged = mat.filter(col("rep") =!= col("prev")).limit(1).isEmpty
-      labels = mat.select(col("doc_id"), col("rep"))
-      i += 1
+  def resolveClusters(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val s = pairs.sparkSession
+    // ids are longs or strings: order them as Comparables
+    val least = (x: Any, y: Any) => if (y.asInstanceOf[Comparable[Any]].compareTo(x) < 0) y else x
+    val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
+    // Written on RDDs, co-partitioned by node: a round is ONE job — its
+    // shuffles are stages of that job, and the joins of edges and labels
+    // are narrow. The same loop on DataFrames ran each shuffle as its own
+    // adaptive-execution job, ~10 jobs a round.
+    // (y, x) for every edge in both directions, keyed by the far end y
+    val edges = graft.Lineage.truncate(s, pairs.select(col("a"), col("b")).rdd
+      .flatMap(r => Seq((r.get(1), r.get(0)), (r.get(0), r.get(1))))
+      .partitionBy(part))
+    // every node is an edge key, so per-partition distinct keys are global
+    var labels = edges.mapPartitions(
+      _.map(_._1).toSet.iterator.map((v: Any) => (v, v)), preservesPartitioning = true)
+    var changed = true
+    var round = 0
+    while (changed) {
+      if (round == maxRounds)
+        throw new IllegalStateException(
+          s"resolveClusters: labels still changing after $maxRounds rounds")
+      // 1. propagate: (x, (prev, hop)); every node has a neighbour
+      val hopped = labels
+        .join(edges.join(labels).values.reduceByKey(part, least))
+        .mapValues { case (l, n) => (l, least(l, n)) }
+      // 2. hook: (x, (prev, to))
+      val hooked = hopped
+        .leftOuterJoin(hopped.values.reduceByKey(part, least))
+        .mapValues { case ((l, h), k) => (l, k.fold(h)(least(h, _))) }
+      // 3. jump: (x, (prev, rep))
+      val jumped = graft.Lineage.truncate(s, hooked
+        .map { case (x, (l, t)) => (t, (x, l)) }
+        .join(hooked.mapValues(_._2), part)
+        .map { case (_, ((x, l), r)) => (x, (l, r)) }
+        .partitionBy(part))
+      // the one job of the round: computes (and checkpoints) `jumped`
+      changed = jumped.filter { case (_, (l, r)) => l != r }.count() > 0
+      labels = jumped.mapValues(_._2)
+      round += 1
     }
-    labels
+    val t = pairs.schema("a").dataType
+    s.createDataFrame(labels.map { case (v, r) => Row(v, r) },
+      StructType(Seq(StructField("doc_id", t), StructField("rep", t))))
   }
 
   /** Materialize the deduplicated corpus: drop every doc whose cluster
@@ -271,20 +288,6 @@ object Dedup {
     * the shingle identity being its 64-bit hash `xxhash64(t, t1, t2)` —
     * every downstream consumer needs only equality, so no shuffle ever
     * carries shingle STRINGS (collision odds at n shingles ≈ n²/2⁶⁵).
-    *
-    * Built on the codegen path — posexplode tokens → windowed lead(1/2)
-    * per doc → hash → distinct — instead of higher-order array lambdas,
-    * which run interpreted (measured 24k shingles/s vs millions here).
-    * The distinct's exchange doubles as the materialization barrier every
-    * consumer (sizes, signatures, verification) reuses, the query-local
-    * analog of a materialized shingle table at 100 TB.
-    */
-  private def explodedShingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(Tables.documents(s, d))
-
-  /** The same codegen shingling for ANY (doc_id, text) DataFrame —
-    * shared with the streaming near-dup suppressor, which runs it per
-    * micro-batch.
     */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame = {
     // ROW-LOCAL shingling: tokens → in-array 3-gram hashes →
@@ -323,33 +326,27 @@ object Dedup {
     */
   def ngramJaccard(s: SparkSession, d: String, tau: Double = 0.5,
                    dfCap: Int = 256): DataFrame = {
-    val (inter, sizes) = interAndSizes(s, d, dfCap)
-    joinSizesAndScore(inter, sizes, tau)
+    val (ex, sizes) = hashedShingles(s, d)
+    joinSizesAndScore(interOf(ex, Tables.documents(s, d), dfCap), sizes, sizes, tau)
+      .orderBy("a", "b")
+  }
+
+  /** The persisted word shingles bucketed and sorted on `h` (DedupIndex
+    * `wshh`), plus per-doc sizes: the rare-shingle SELF-join below — the
+    * set-overlap family's dominant cost — and the df(h) aggregate both
+    * plan ZERO exchange and no sort.
+    */
+  private def hashedShingles(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    DedupIndex.ensureWord(s, d)
+    (s.table(DedupIndex.tbl("wshh", d)), s.table(DedupIndex.tbl("wsizes", d)))
   }
 
   /** Shared candidate machinery for the exact set-overlap family
-    * (q53 Jaccard, q82 containment): (a,b,inter) for every pair sharing
-    * ≥ 1 rare shingle, plus per-doc set sizes — the rare/hot df-cap
+    * (q53 Jaccard, q82 containment): (a,b,inter) for every pair of
+    * `docs` sharing ≥ 1 rare shingle of `ex` — the rare/hot df-cap
     * decomposition documented on [[ngramJaccard]].
     */
-  private def interAndSizes(s: SparkSession, d: String,
-                            dfCap: Int): (DataFrame, DataFrame) = {
-    // Index probe (default): the persisted `wshh` table is bucketed and
-    // sorted on `h`, so the rare-shingle SELF-join below — the operator's
-    // dominant cost — and the df(h) aggregate both plan ZERO exchange and
-    // no sort; `wsizes` replaces the per-run sizes aggregation outright.
-    // Recompute twin behind the dial: row-local shingling shared across
-    // the four consumers via the materializeShingles dial as before.
-    val (ex, sizes) =
-      if (DedupIndex.useIndex(s)) {
-        DedupIndex.ensureWord(s, d)
-        (s.table(DedupIndex.tbl("wshh", d)),
-          s.table(DedupIndex.tbl("wsizes", d)))
-      } else {
-        val exRaw = explodedShingles(s, d)
-        val ex0 = if (materializeShingles(s, d)) exRaw.truncated else exRaw
-        (ex0, ex0.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-      }
+  private[graft] def interOf(ex: DataFrame, docs: DataFrame, dfCap: Int): DataFrame = {
     // The effective cap is a corpus FRACTION, not an absolute df: df
     // grows with corpus size, so a fixed cap reclassifies ever more
     // shingles as hot at scale and the per-doc hot-set arrays balloon
@@ -358,7 +355,7 @@ object Dedup {
     // the exactness argument holds for ANY cap. n_docs rides in as a
     // 1-row aggregate cross-join (no hint needed — AQE broadcasts a
     // 1-row side unconditionally), not a separate driver action.
-    val nDocs = Tables.documents(s, d).select(count(lit(1)).as("n_docs"))
+    val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val hot = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .crossJoin(nDocs)
       .filter(col("df") > greatest(lit(dfCap.toLong), col("n_docs") / 200))
@@ -372,14 +369,13 @@ object Dedup {
       .agg(count(lit(1)).as("inter_rare"))
     val docHot = ex.join(hot, "h")
       .groupBy(col("doc_id")).agg(collect_set(col("h")).as("hs"))
-    val inter = interRare
+    interRare
       .join(docHot.select(col("doc_id").as("a"), col("hs").as("hsa")), Seq("a"), "left")
       .join(docHot.select(col("doc_id").as("b"), col("hs").as("hsb")), Seq("b"), "left")
       .select(col("a"), col("b"),
         (col("inter_rare") +
           coalesce(size(array_intersect(col("hsa"), col("hsb"))).cast("long"), lit(0L)))
           .as("inter"))
-    (inter, sizes)
   }
 
   /** Shingle-set CONTAINMENT pairs: max(|A∩B|/|A|, |A∩B|/|B|) ≥ τ —
@@ -393,7 +389,12 @@ object Dedup {
     */
   def containmentPairs(s: SparkSession, d: String, tau: Double = 0.8,
                        dfCap: Int = 256): DataFrame = {
-    val (inter, sizes) = interAndSizes(s, d, dfCap)
+    val (ex, sizes) = hashedShingles(s, d)
+    containmentOf(interOf(ex, Tables.documents(s, d), dfCap), sizes, tau)
+  }
+
+  /** inter(a,b) ⋈ sizes → rounded containment ≥ τ, ordered. */
+  private[graft] def containmentOf(inter: DataFrame, sizes: DataFrame, tau: Double): DataFrame =
     inter
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
       .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
@@ -402,18 +403,17 @@ object Dedup {
       .filter(col("containment") >= tau)
       .select("a", "b", "containment")
       .orderBy("a", "b")
-  }
 
-  /** inter(a,b) ⋈ sizes → rounded Jaccard ≥ τ, ordered. */
-  private[graft] def joinSizesAndScore(inter: DataFrame, sizes: DataFrame, tau: Double): DataFrame =
+  /** inter(a,b) ⋈ per-side sizes → rounded Jaccard ≥ τ. */
+  private[graft] def joinSizesAndScore(inter: DataFrame, sizesA: DataFrame,
+                                       sizesB: DataFrame, tau: Double): DataFrame =
     inter
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
+      .join(sizesA.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
+      .join(sizesB.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
       .withColumn("jaccard",
         round(col("inter").cast("double") / (col("sza") + col("szb") - col("inter")), 4))
       .filter(col("jaccard") >= tau)
       .select("a", "b", "jaccard")
-      .orderBy("a", "b")
 
   private[graft] val MinhashPerms = 64
   private[graft] val Bands = 16 // 16 bands × 4 rows
@@ -456,73 +456,180 @@ object Dedup {
     sig.select(col("doc_id"), posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
   }
 
-  /** Signature-agreement count between two aliased signature sides. */
-  private[graft] def agreement(aAlias: String, bAlias: String): Column =
-    (0 until MinhashPerms)
-      .map(i => when(col(s"$aAlias.m$i") === col(s"$bAlias.m$i"), 1).otherwise(0))
-      .reduce(_ + _)
-
   // Permutation i of a shingle's 64-bit base hash h is xxhash64(i, h):
   // one string hash per shingle, then 64 cheap fixed-width long hashes —
   // ANSI-safe (no wrapping multiply) and fully codegen'd.
 
-  /** MinHash + LSH near-dup detection: base-hash shingles → 64 min
-    * aggregates (whole-stage-codegen HashAggregate with map-side partial
-    * mins — the shuffle carries 64 longs per doc, not shingles) → 16 band
-    * keys → bucket self-join → candidate pairs → exact-Jaccard
-    * verification via the shared shingle exchange. Verified Jaccard
-    * removes LSH false positives, so output = true near-dup pairs at LSH
-    * recall (~1.0 at j≈0.98 with 16×4 banding).
+  /** The MinHash-LSH features of one side of a near-dup pair join — the
+    * input of the three pair stages below:
+    *  - `bands` (doc_id, band, bkey): 16 band keys per doc, the band id
+    *    hashed into `bkey`;
+    *  - `sig`   (doc_id, m0..m63): the 64-minhash signature;
+    *  - `ex`    (doc_id, h): the doc's distinct hashed shingles;
+    *  - `sizes` (doc_id, sz): shingles per doc.
+    *
+    * Three sources build it: [[Features.word]] and [[Features.char]]
+    * extract it from (doc_id, text) rows; [[Features.indexed]] reads the
+    * persisted [[DedupIndex]] tables, which are those inline fields
+    * written once. `ex` and `sizes` are evaluated on first use, so a
+    * signature-only side ([[Features.signatures]]) never builds them.
+    *
+    * `corpusSized` marks a side whose joins carry `merge` hints: AQE's
+    * SMJ→SHJ conversion thresholds on COMPRESSED shuffle bytes, and at
+    * the 5 M-doc point its 32 concurrent unspillable signature-map builds
+    * exhausted the executor pool (round-5 measurement; same mechanism as
+    * the lmScore model joins). A sort-merge join spills; auto-broadcast
+    * only ever applied below ~100 k docs (64 MB of signature rows), where
+    * everything is fast regardless — the hint costs nothing there. Sides
+    * built per batch (streams, index probes) stay unhinted.
     */
-  def minhashLsh(s: SparkSession, d: String, tau: Double = 0.5): DataFrame =
-    // Index probe (default): signatures, band keys, shingles and sizes
-    // come from the persisted full-corpus layout (DedupIndex) — the
-    // candidate self-join plans zero exchange on both sides and corpus
-    // text is never read. Feeds q51 and every composite on top of it
-    // (q56/q64/q107/q115). Recompute twin behind the dial: the row-local
-    // signature expression (bit-identical to the shingle-table
-    // aggregation, spec-asserted) with query-local shingle sharing.
-    if (DedupIndex.useIndex(s)) {
-      DedupIndex.ensureWord(s, d)
-      indexedLshPairs(tau,
-        bands = s.table(DedupIndex.tbl("wbands", d)),
-        sig = s.table(DedupIndex.tbl("wsig", d)),
-        exD = s.table(DedupIndex.tbl("wshd", d)),
-        sizes = s.table(DedupIndex.tbl("wsizes", d)))
-    } else
-      minhashLshPairs(explodedShingles(s, d), tau,
-        Some(signaturesRowLevel(Tables.documents(s, d))),
-        materializeEx = materializeShingles(s, d))
+  final class Features(val bands: DataFrame, val sig: DataFrame,
+                       ex0: => DataFrame, sizes0: => DataFrame,
+                       val corpusSized: Boolean) {
+    lazy val ex: DataFrame = ex0
+    lazy val sizes: DataFrame = sizes0
 
-  /** The LSH pair pipeline over PERSISTED index tables — same three
-    * stages as [[minhashLshPairs]] (banded candidates → signature-
-    * agreement pre-filter → exact-Jaccard verification), each stage a
-    * probe of a bucketed table instead of a recomputed intermediate.
-    * Candidates join on `bkey` ALONE (the LshIndex.probe argument: the
-    * band id is hashed INTO bkey, a cross-band bkey equality needs a
-    * 64-bit xxhash collision, and any phantom candidate dies in exact
-    * verification — output unchanged), so the self-join needs no
-    * exchange and no sort on either side. The sig/shingle sides keep the
-    * merge hints of the recompute path: with bucketed inputs the SMJ is
-    * exchange-free AND sort-free on the index side, and stays spillable
-    * at any scale (the 5 M-doc SHJ-build lesson).
+    private[Dedup] def hinted(df: DataFrame): DataFrame =
+      if (corpusSized) df.hint("merge") else df
+  }
+
+  object Features {
+    sealed trait Grams
+    /** Word 3-gram shingles (q51 family, q71, q106, the streams). */
+    case object WordGrams extends Grams
+    /** Char 5-gram stride-2 shingles (q57). */
+    case object CharGrams extends Grams
+
+    /** Word 3-gram features of `docs`. Signatures come row-local (the
+      * [[signaturesRowLevel]] expression, bit-identical to aggregating
+      * the shingle table — spec-asserted). `cacheEx = false` leaves the
+      * shingle table un-materialized (see [[MaterializeShinglesMaxDocs]]).
+      */
+    def word(docs: DataFrame, cacheEx: Boolean = true,
+             corpusSized: Boolean = false): Features =
+      inline(shinglesOf(docs), signaturesRowLevel(docs), cacheEx, corpusSized)
+
+    /** Char 5-gram stride-2 features of `docs`. */
+    def char(docs: DataFrame): Features =
+      inline(charShinglesOf(docs), signaturesRowLevelChar(docs, 5, 2),
+        cacheEx = true, corpusSized = false)
+
+    /** The shingle table feeds several consumers (sizes, both sides of
+      * exact verification, index writers), so it is materialized once;
+      * the signature table — one 64-long row per doc — feeds the band
+      * keys and both agreement joins, so it always is.
+      */
+    private def inline(ex0: DataFrame, sig0: DataFrame, cacheEx: Boolean,
+                       corpusSized: Boolean): Features = {
+      val sig = sig0.truncated
+      val ex = if (cacheEx) ex0.truncated else ex0
+      new Features(bandsOf(sig), sig, ex,
+        ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")), corpusSized)
+    }
+
+    /** Features carrying only signatures and band keys — for the
+      * estimate-only operators (q38, q58), which never verify. */
+    def signatures(sig: DataFrame, corpusSized: Boolean = false): Features = {
+      def none = throw new UnsupportedOperationException(
+        "signature-only features carry no shingles")
+      new Features(bandsOf(sig), sig, none, none, corpusSized)
+    }
+
+    /** The full-corpus features of `d` from the persisted [[DedupIndex]]
+      * layout, built on first use: every table is bucketed on its join
+      * key, so the candidate self-join and the verification joins plan
+      * zero index-side exchange and corpus text is never read.
+      */
+    def indexed(s: SparkSession, d: String, grams: Grams): Features = {
+      val prefix = grams match {
+        case WordGrams => DedupIndex.ensureWord(s, d); "w"
+        case CharGrams => DedupIndex.ensureChar(s, d); "c"
+      }
+      def t(kind: String): DataFrame = s.table(DedupIndex.tbl(prefix + kind, d))
+      new Features(t("bands"), t("sig"), t("shd"), t("sizes"), corpusSized = true)
+    }
+  }
+
+  /** Stage 1, banded candidates: the distinct pairs (a, b), a from side
+    * `a` and b from side `b`, that share a band key and pass `pairFilter`
+    * (over the join aliases `a`/`b`). The join keys on `bkey` ALONE: the
+    * band id is hashed into it, so a cross-band equality needs a 64-bit
+    * xxhash collision, and a side bucketed on `bkey` (the persisted
+    * layouts) reads with no exchange — adding `band` as a key would make
+    * Spark demand co-partitioning on both columns
+    * (requireAllClusterKeysForCoPartition) and re-shuffle it.
     */
-  private def indexedLshPairs(tau: Double, bands: DataFrame,
-                              sig: DataFrame, exD: DataFrame,
-                              sizes: DataFrame): DataFrame = {
-    val candRaw = bands.as("a").join(bands.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
+  private[graft] def candidates(a: Features, b: Features,
+                                pairFilter: Column = lit(true)): DataFrame =
+    a.bands.as("a").join(b.hinted(b.bands).as("b"),
+        col("a.bkey") === col("b.bkey") && pairFilter)
       .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
       .dropDuplicates("a", "b")
-    val agree = agreement("sa", "sb")
-    val minAgree = math.max(0, math.ceil((tau - 0.25) * MinhashPerms).toInt)
-    val cand = candRaw
-      .join(sig.as("sa").hint("merge"), col("a") === col("sa.doc_id"))
-      .join(sig.as("sb").hint("merge"), col("b") === col("sb.doc_id"))
-      .filter(agree >= minAgree)
-      .select(col("a"), col("b"))
-    verifyExactJaccard(exD, cand, sizes, tau)
+
+  /** Stage 2, signature agreement: the candidates whose signatures match
+    * in at least `minAgree` of the 64 positions, with that count as
+    * `agree` — an unbiased Jaccard estimate (σ = √(j(1-j)/64) ≤ 0.063).
+    */
+  private[graft] def agreed(cand: DataFrame, a: Features, b: Features,
+                            minAgree: Int): DataFrame = {
+    val agree = (0 until MinhashPerms)
+      .map(i => when(col(s"sa.m$i") === col(s"sb.m$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    cand
+      .join(a.hinted(a.sig).as("sa"), col("a") === col("sa.doc_id"))
+      .join(b.hinted(b.sig).as("sb"), col("b") === col("sb.doc_id"))
+      .select(col("a"), col("b"), agree.as("agree"))
+      .filter(col("agree") >= minAgree)
   }
+
+  /** Stage 3, exact-Jaccard verification of a candidate pair set: side
+    * a's shingles joined to the candidates, matched against side b's
+    * shingles, scored with each side's own sizes. No hint on the
+    * candidate side — it is banding-bounded in expectation but
+    * skew-prone on adversarial corpora; AQE broadcasts it at small SFs
+    * and shuffles it when big.
+    */
+  private[graft] def verified(cand: DataFrame, a: Features, b: Features,
+                              tau: Double): DataFrame = {
+    val candA = a.ex.join(cand, col("doc_id") === col("a"))
+      .select(col("a"), col("b"), col("h"))
+    val inter = candA.join(b.hinted(b.ex).as("y"),
+        col("y.doc_id") === col("b") && col("y.h") === candA("h"))
+      .groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("inter"))
+    joinSizesAndScore(inter, a.sizes, b.sizes, tau)
+  }
+
+  /** The agreement [[agreed]] requires ahead of exact verification at τ:
+    * ≥ (τ − 0.25)·64 is a >4σ-safe bound for ANY true pair at τ while it
+    * rejects the band-collision false positives a shared vocabulary
+    * produces (measured 103k candidates → a few hundred). Verification
+    * keeps the output exact, so the bound only shrinks the shingle-level
+    * join, the verification cost driver at 100 TB.
+    */
+  private[graft] def verifiableAgreement(tau: Double): Int =
+    math.max(0, math.ceil((tau - 0.25) * MinhashPerms).toInt)
+
+  /** The exact near-dup pairs (a, b, jaccard ≥ τ) between two sides: all
+    * three stages. Output = the true pairs at LSH recall (~1.0 at j≈0.98
+    * with 16×4 banding). Unordered.
+    */
+  private[graft] def nearDupPairs(a: Features, b: Features, pairFilter: Column,
+                                  tau: Double): DataFrame =
+    verified(agreed(candidates(a, b, pairFilter), a, b, verifiableAgreement(tau)),
+      a, b, tau)
+
+  /** [[nearDupPairs]] of a side with itself, each pair once (a < b). */
+  private[graft] def selfPairs(f: Features, tau: Double): DataFrame =
+    nearDupPairs(f, f, col("a.doc_id") < col("b.doc_id"), tau)
+
+  /** MinHash + LSH near-dup detection over the persisted full-corpus
+    * features (DedupIndex): the candidate self-join plans zero exchange
+    * on both sides and corpus text is never read. Feeds q51 and every
+    * composite on top of it (q56/q64/q107/q115).
+    */
+  def minhashLsh(s: SparkSession, d: String, tau: Double = 0.5): DataFrame =
+    selfPairs(Features.indexed(s, d, Features.WordGrams), tau).orderBy("a", "b")
 
   /** Cross-source duplication matrix: for every unordered source pair,
     * the number of exact-verified near-dup pairs (jaccard ≥ τ) with one
@@ -558,146 +665,41 @@ object Dedup {
   def minhashApprox(s: SparkSession, d: String, tau: Double = 0.5): DataFrame = {
     // estimate-only → no shingle table is ever needed: signatures come
     // from the row-local codegen expression (zero exchanges before the
-    // band join — the whole operator is scan → project → 1 pair shuffle).
-    // Materializing the signature table (Lineage.truncate) is the
-    // cache-vs-recompute dial: it wins while the 64-long rows fit
-    // executor storage, and loses when they don't — at the 10000× point
-    // (50 M docs ≈ 30 GB of signature blocks) the cached form spilled
-    // the whole run into superlinear territory on one box, while
-    // recomputing the row-local projection per consumer is just extra
-    // scan+hash work that tracks corpus size. `spark.graft.dedup.
-    // materializeSigs` = true | false | auto (auto: materialize below
-    // ~10 M docs, metadata-count-cheap).
+    // band join — the whole operator is scan → project → 1 pair shuffle),
+    // materialized up to MaterializeSigsMaxDocs.
     val sigBase = signaturesRowLevel(Tables.documents(s, d))
-    val sig = s.conf.get("spark.graft.dedup.materializeSigs", "auto") match {
-      case "true"  => sigBase.truncated
-      case "false" => sigBase
-      case _ =>
-        if (Tables.documents(s, d).count() <= 10000000L)
-          sigBase.truncated
-        else sigBase
-    }
-    val bands = bandsOf(sig)
-    val candRaw = bands.as("a").join(bands.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .dropDuplicates("a", "b")
-    val agree = agreement("sa", "sb")
-    candRaw
-      .join(sig.as("sa").hint("merge"), col("a") === col("sa.doc_id"))
-      .join(sig.as("sb").hint("merge"), col("b") === col("sb.doc_id"))
+    val sig =
+      if (Tables.documents(s, d).count() <= MaterializeSigsMaxDocs) sigBase.truncated
+      else sigBase
+    val f = Features.signatures(sig, corpusSized = true)
+    // no agreement pre-filter: the estimate IS the output, filtered at τ
+    // after rounding
+    agreed(candidates(f, f, col("a.doc_id") < col("b.doc_id")), f, f, minAgree = 0)
       .select(col("a"), col("b"),
-        round(agree.cast("double") / MinhashPerms, 4).as("est_jaccard"))
+        round(col("agree").cast("double") / MinhashPerms, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= tau)
       .orderBy("a", "b")
   }
 
-  /** The q58 cache-vs-recompute dial, generalized to the SHINGLE table
-    * (tens of rows × ~16 bytes per doc — an order of magnitude beyond a
-    * signature row): materializing it wins while its blocks fit executor
-    * storage and detonates when they don't. Measured round 5 at the
-    * 5 M-doc point: the eager materialization's hash agg starved the
-    * unified memory region mid-put (UNABLE_TO_ACQUIRE, 48 g heap,
-    * q115/q51 path) while recomputing the shingle projection per
-    * consumer is linear scan+hash work that tracks corpus size.
-    * `spark.graft.dedup.materializeShingles` = true | false | auto
-    * (auto: materialize below 2 M docs, metadata-count-cheap). On a
-    * real cluster the storage pool scales with executors, so `true` is
-    * safe far longer there — the dial is per-deployment.
+  /** Signature tables are materialized (Lineage.truncate) only up to this
+    * many corpus docs. Caching wins while the 64-long rows fit executor
+    * storage and loses when they don't: at the 10000× point (50 M docs ≈
+    * 30 GB of signature blocks) the cached form spilled the whole run
+    * into superlinear territory on one box, while recomputing the
+    * row-local projection per consumer is extra scan+hash work that
+    * tracks corpus size.
     */
-  private def materializeShingles(s: SparkSession, d: String): Boolean =
-    s.conf.get("spark.graft.dedup.materializeShingles", "auto") match {
-      case "true"  => true
-      case "false" => false
-      case _       => Tables.documents(s, d).count() <= 2000000L
-    }
+  private val MaterializeSigsMaxDocs = 10000000L
 
-  /** Shared LSH front-end: materialized shingles, materialized minhash
-    * signatures, and the band-bucket candidate pair set (a, b).
+  /** The same size rule for SHINGLE tables (tens of rows × ~16 bytes per
+    * doc — an order of magnitude beyond a signature row), materialized
+    * only up to this many corpus docs. Measured round 5 at the 5 M-doc
+    * point: the eager materialization's hash agg starved the unified
+    * memory region mid-put (UNABLE_TO_ACQUIRE, 48 g heap) while
+    * recomputing the shingle projection per consumer is linear scan+hash
+    * work that tracks corpus size.
     */
-  private def lshCandidates(exIn: DataFrame,
-                            sigOpt: Option[DataFrame] = None,
-                            materializeEx: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    // The shingle table feeds several consumers (sizes, signatures, both
-    // sides of exact verification). Materialize it once — the
-    // query-local analog of the materialized shingle table a 100 TB
-    // deployment would keep as a real table — UNLESS the
-    // materializeShingles dial says the blocks won't fit this box.
-    val ex = if (materializeEx) exIn.truncated else exIn
-    // One row per doc, 64 longs — tiny; materialized because it feeds
-    // four plan branches (two band sides, two agreement-join sides).
-    // Callers whose features are word 3-grams supply the shuffle-free
-    // row-level signature instead of the shingle-table aggregation.
-    val sig = sigOpt.getOrElse(signaturesOf(ex)).truncated
-    val bands = bandsOf(sig)
-    // the band SELF-join is corpus-sized on both sides (16 band rows per
-    // doc) → merge hint, like every unbounded side (the 5 M-doc SHJ-build
-    // lesson). The persisted-index probe (LshIndex) keeps its own plan:
-    // its index side is BUCKETED, so it joins with zero exchange and no
-    // hash build at all.
-    val candRaw = bands.as("a").join(bands.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .dropDuplicates("a", "b")
-    (ex, sig, candRaw)
-  }
-
-  /** LSH + exact-verification core over ANY hashed shingle table
-    * (doc_id, h). Works for word grams, char grams, or any feature set —
-    * candidate cost is bounded by the banding, never by Σ df² of an
-    * all-pairs shingle join (char grams on a shared vocabulary made that
-    * explode: 133 s vs ~3 s at sf0.1).
-    */
-  private def minhashLshPairs(exIn: DataFrame, tau: Double,
-                              sigOpt: Option[DataFrame] = None,
-                              materializeEx: Boolean = true): DataFrame = {
-    val (ex, sig, candRaw) = lshCandidates(exIn, sigOpt, materializeEx)
-    val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // Signature-agreement pre-filter: the matching-minhash count is an
-    // unbiased Jaccard estimate (σ = √(j(1-j)/64) ≤ 0.063), so requiring
-    // agreement ≥ (τ - 0.25)·64 is a >4σ-safe bound for ANY true pair at
-    // τ while rejecting the band-collision false positives a shared
-    // vocabulary produces (measured 103k candidates → a few hundred).
-    // Exact verification below keeps the output exact; this only shrinks
-    // the expensive shingle-level join — the verification cost driver at
-    // 100 TB. The sig side is CORPUS-sized (one 64-long row per doc), so
-    // its joins carry `merge` hints: AQE's SMJ→SHJ conversion thresholds
-    // on COMPRESSED shuffle bytes, and at the 5 M-doc point its 32
-    // concurrent unspillable signature-map builds exhausted the executor
-    // pool (round-5 measurement; same mechanism as the lmScore model
-    // joins). A sort-merge join spills; auto-broadcast only ever applied
-    // below ~100 k docs (64 MB of signature rows), where everything is
-    // fast regardless — the hint costs nothing there.
-    val agree = agreement("sa", "sb")
-    val minAgree = math.max(0, math.ceil((tau - 0.25) * MinhashPerms).toInt)
-    val cand = candRaw
-      .join(sig.as("sa").hint("merge"), col("a") === col("sa.doc_id"))
-      .join(sig.as("sb").hint("merge"), col("b") === col("sb.doc_id"))
-      .filter(agree >= minAgree)
-      .select(col("a"), col("b"))
-    verifyExactJaccard(ex, cand, sizes, tau)
-  }
-
-  /** Exact-Jaccard verification restricted to a candidate pair set:
-    * shingles of side a joined against the candidate set, matched against
-    * shingles of side b. No broadcast hint on the candidate side — it is
-    * banding-bounded in expectation but skew-prone on adversarial
-    * corpora; AQE broadcasts it at small SFs and shuffles it when big.
-    */
-  private def verifyExactJaccard(ex: DataFrame, cand: DataFrame,
-                                 sizes: DataFrame, tau: Double): DataFrame = {
-    val candA = ex.join(cand, col("doc_id") === col("a"))
-      .select(col("a"), col("b"), col("h"))
-    // the b-side shingle stream is corpus-sized → merge hint (spillable;
-    // the 5 M-doc SHJ-build lesson — see minhashLshPairs)
-    val inter = candA.join(ex.as("y").hint("merge"),
-        col("y.doc_id") === col("b") && col("y.h") === candA("h"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("inter"))
-    joinSizesAndScore(inter, sizes, tau)
-  }
+  private val MaterializeShinglesMaxDocs = 2000000L
 
   /** Cross-corpus near-dup join — "which documents of the NEW crawl are
     * near-dups of the EXISTING corpus" (the incremental-ingestion shape;
@@ -705,46 +707,17 @@ object Dedup {
     * the self-join operators this only forms A×B candidates: band keys of
     * A join band keys of B, so cost is |A|'s collisions against B — never
     * within-corpus pairs that would be discarded anyway, and never O(n²).
-    * Signatures are the row-local codegen expression on both sides;
-    * candidates pass the signature-agreement pre-filter, then exact
-    * word-3-gram Jaccard verification. Output (a ∈ A, b ∈ B, jaccard ≥ τ)
-    * is exact at LSH recall, same as q51.
+    * Both sides are inline word features; output (a ∈ A, b ∈ B,
+    * jaccard ≥ τ) is exact at LSH recall, same as q51.
     */
   def crossCorpusNearDup(s: SparkSession, d: String, tau: Double = 0.5): DataFrame = {
     val docs = Tables.documents(s, d)
-    val aSrc = (0 to 9).map(i => s"src$i")
-    val inA = col("source").isin(aSrc: _*)
-    val (da, db) = (docs.filter(inA), docs.filter(!inA))
-    // same materializeShingles dial as the self-join operators: at the
-    // 5 M-doc point the two cached shingle halves are the same blocks
-    // that starved q51's path; signatures (64 longs/doc) stay cached
-    val matEx = materializeShingles(s, d)
-    val exA = if (matEx) shinglesOf(da).truncated else shinglesOf(da)
-    val exB = if (matEx) shinglesOf(db).truncated else shinglesOf(db)
-    val sigA = signaturesRowLevel(da).truncated
-    val sigB = signaturesRowLevel(db).truncated
-    val candRaw = bandsOf(sigA).as("a").join(bandsOf(sigB).as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .dropDuplicates("a", "b")
-    val minAgree = math.max(0, math.ceil((tau - 0.25) * MinhashPerms).toInt)
-    // corpus-sized sig/shingle sides carry merge hints (the 5 M-doc
-    // SHJ-build lesson — see minhashLshPairs)
-    val cand = candRaw
-      .join(sigA.as("sa").hint("merge"), col("a") === col("sa.doc_id"))
-      .join(sigB.as("sb").hint("merge"), col("b") === col("sb.doc_id"))
-      .filter(agreement("sa", "sb") >= minAgree)
-      .select(col("a"), col("b"))
-    // sizes from both sides (doc_ids are disjoint across the corpora)
-    val sizes = exA.unionByName(exB)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val candA = exA.join(cand, col("doc_id") === col("a"))
-      .select(col("a"), col("b"), col("h"))
-    val inter = candA.join(exB.as("y").hint("merge"),
-        col("y.doc_id") === col("b") && col("y.h") === candA("h"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("inter"))
-    joinSizesAndScore(inter, sizes, tau)
+    val inA = col("source").isin(LshIndex.corpusSources: _*)
+    val cacheEx = docs.count() <= MaterializeShinglesMaxDocs
+    nearDupPairs(
+      Features.word(docs.filter(inA), cacheEx, corpusSized = true),
+      Features.word(docs.filter(!inA), cacheEx, corpusSized = true),
+      lit(true), tau).orderBy("a", "b")
   }
 
   private val SimhashBits = 64
@@ -781,18 +754,9 @@ object Dedup {
     val chunkKeys = (0 until SimhashChunks).map(j =>
       shiftrightunsigned(col("simhash"), j * (SimhashBits / SimhashChunks))
         .bitwiseAND(lit((1L << (SimhashBits / SimhashChunks)) - 1)))
-    val chunks = sig.select(
+    chunkPairs(sig.select(
       col("doc_id"), col("simhash"),
-      posexplode(array(chunkKeys: _*)).as(Seq("chunk", "ckey")))
-    chunks.as("a").join(chunks.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("a"), col("b.doc_id").as("b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .dropDuplicates("a", "b")
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
+      posexplode(array(chunkKeys: _*)).as(Seq("chunk", "ckey"))), maxHamming)
   }
 
   /** Oracle-checked SimHash bridge (the q61b pattern applied to q52):
@@ -808,18 +772,19 @@ object Dedup {
     */
   def simhashPairsMirrorable(s: SparkSession, d: String,
                              maxHamming: Int = 3): DataFrame = {
-    // Index probe (default): the signature computation — an md5 per token
-    // plus a 32-conditional-sum aggregate over every token occurrence —
-    // is the operator's whole cost and is corpus-invariant, so it lives
-    // in the persisted `mchunks` layout (DedupIndex); the timed query is
-    // the chunk-equality self-join, which the (ckey, chunk) bucketing
-    // plans with zero exchange and no sort. Recompute twin behind the
-    // dial (spec-pinned row-identical).
-    val ch =
-      if (DedupIndex.useIndex(s)) {
-        DedupIndex.ensureMirror(s, d)
-        s.table(DedupIndex.tbl("mchunks", d))
-      } else mirrorChunksOf(Tables.documents(s, d))
+    // The signature computation — an md5 per token plus a
+    // 32-conditional-sum aggregate over every token occurrence — is the
+    // operator's whole cost and is corpus-invariant, so it lives in the
+    // persisted `mchunks` layout (DedupIndex); the timed query is the
+    // chunk-equality self-join, which the (ckey, chunk) bucketing plans
+    // with zero exchange and no sort.
+    DedupIndex.ensureMirror(s, d)
+    chunkPairs(s.table(DedupIndex.tbl("mchunks", d)), maxHamming)
+  }
+
+  /** The SimHash candidate self-join (q52, q52b) over a (doc_id,
+    * simhash, chunk, ckey) chunk table. */
+  private[graft] def chunkPairs(ch: DataFrame, maxHamming: Int): DataFrame =
     // ckey leads the predicate so the required SMJ ordering matches the
     // persisted (ckey, chunk) sort — equality key order is join-semantics
     // neutral.
@@ -832,11 +797,10 @@ object Dedup {
       .dropDuplicates("a", "b")
       .filter(col("hamming") <= maxHamming)
       .orderBy("a", "b")
-  }
 
   /** The q52b signature machinery — (doc_id, simhash, chunk, ckey), one
-    * row per 8-bit chunk of the 32-bit mirrorable simhash. Shared by the
-    * recompute path and the DedupIndex `mchunks` build.
+    * row per 8-bit chunk of the 32-bit mirrorable simhash — what the
+    * DedupIndex `mchunks` build writes.
     */
   private[graft] def mirrorChunksOf(docs: DataFrame): DataFrame = {
     val bits = 32

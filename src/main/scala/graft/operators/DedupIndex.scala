@@ -1,9 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Lineage.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted FULL-CORPUS dedup feature index — the shared signature /
   * shingle layout the whole self-join dedup family probes, instead of
@@ -36,13 +34,8 @@ import org.apache.spark.sql.functions._
   *  ckey) bucketed+sorted by (ckey, chunk) — the chunk-equality candidate
   *  self-join is the whole operator, and it plans exchange-free.
   *
-  * Equivalence: every table is a deterministic projection of
-  * documents.parquet, written once (mode=overwrite, no appends), so a
-  * probe reads exactly the rows the recompute path would have built —
-  * each rewired operator keeps its recompute form behind
-  * `spark.graft.dedup.useIndex=false` and a spec pins the two paths
-  * row-identical. Namespacing, freshness (contentStamp generation keys)
-  * and GC follow LshIndex verbatim; `graft_ddidx_` is registered in
+  * Namespacing, freshness (contentStamp generation keys) and GC follow
+  * LshIndex verbatim; `graft_ddidx_` is registered in
   * [[graft.WarehouseGC.Families]].
   */
 object DedupIndex {
@@ -55,13 +48,6 @@ object DedupIndex {
 
   private[graft] def tbl(kind: String, d: String): String =
     s"graft_ddidx_${kind}_${graft.DirKeys.generation(d, "documents.parquet")}"
-
-  /** The index-vs-recompute dial. Default on: at every scale the probe
-    * form is the one a deployment runs repeatedly; the recompute form
-    * stays reachable for equivalence tests and one-shot ad-hoc corpora.
-    */
-  private[graft] def useIndex(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.dedup.useIndex", "true") == "true"
 
   private def out(df: DataFrame, name: String,
                   bucketCol: String, sortCols: Seq[String]): Unit =
@@ -93,33 +79,29 @@ object DedupIndex {
     build
   }
 
-  /** Word 3-gram tables: one shingle pass (truncated — read back by three
-    * writers) + one row-local signature pass over the corpus.
-    */
+  /** The fields of one inline [[Dedup.Features]] value, as the
+    * `<prefix>shd`/`sizes`/`sig`/`bands` tables [[Dedup.Features.indexed]]
+    * reads. */
+  private def outFeatures(f: Dedup.Features, prefix: String, d: String): Unit = {
+    out(f.ex, tbl(prefix + "shd", d), "doc_id", Seq("doc_id", "h"))
+    out(f.sizes, tbl(prefix + "sizes", d), "doc_id", Seq("doc_id"))
+    out(f.sig, tbl(prefix + "sig", d), "doc_id", Seq("doc_id"))
+    out(f.bands, tbl(prefix + "bands", d), "bkey", Seq("bkey"))
+  }
+
+  /** Word 3-gram tables: the word features plus their shingles
+    * re-bucketed by `h` (`wshh`). */
   def ensureWord(s: SparkSession, d: String): Unit =
     ensure(s, d, WordKinds) {
-      val docs = Tables.documents(s, d)
-      val ex = Dedup.shinglesOf(docs).truncated
-      val sig = Dedup.signaturesRowLevel(docs).truncated
-      out(ex, tbl("wshh", d), "h", Seq("h"))
-      out(ex, tbl("wshd", d), "doc_id", Seq("doc_id", "h"))
-      out(ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-        tbl("wsizes", d), "doc_id", Seq("doc_id"))
-      out(sig, tbl("wsig", d), "doc_id", Seq("doc_id"))
-      out(Dedup.bandsOf(sig), tbl("wbands", d), "bkey", Seq("bkey"))
+      val f = Dedup.Features.word(Tables.documents(s, d))
+      out(f.ex, tbl("wshh", d), "h", Seq("h"))
+      outFeatures(f, "w", d)
     }
 
   /** Char 5-gram (stride 2) tables — q57's feature set. */
   def ensureChar(s: SparkSession, d: String): Unit =
     ensure(s, d, CharKinds) {
-      val docs = Tables.documents(s, d)
-      val ex = Dedup.charShinglesOf(docs).truncated
-      val sig = Dedup.signaturesRowLevelChar(docs, 5, 2).truncated
-      out(ex, tbl("cshd", d), "doc_id", Seq("doc_id", "h"))
-      out(ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")),
-        tbl("csizes", d), "doc_id", Seq("doc_id"))
-      out(sig, tbl("csig", d), "doc_id", Seq("doc_id"))
-      out(Dedup.bandsOf(sig), tbl("cbands", d), "bkey", Seq("bkey"))
+      outFeatures(Dedup.Features.char(Tables.documents(s, d)), "c", d)
     }
 
   /** Mirror-simhash chunk table — q52b's candidate key set. */

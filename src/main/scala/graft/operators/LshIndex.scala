@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.Lineage.TruncateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,20 +58,17 @@ object LshIndex {
     * future probe, on both join sides, with nothing left to detect it).
     * The price is bounded the other way: a retry after a partial write
     * can leave DUPLICATE rows for the affected docs in the four DATA
-    * tables — which [[probe]] is insensitive to by construction
-    * (candidate pairs deduplicated, intersections counted DISTINCT,
-    * sizes max-aggregated, self-pairs guarded).
+    * tables, which [[probe]] is insensitive to.
     */
   private def write(docs: DataFrame, d: String, mode: String): Unit = {
-    val sig = Dedup.signaturesRowLevel(docs).truncated
-    val ex = Dedup.shinglesOf(docs).truncated
+    val f = Dedup.Features.word(docs)
     def out(df: DataFrame, kind: String, key: String): Unit =
       df.write.bucketBy(Buckets, key).sortBy(key)
         .mode(mode).format("parquet").saveAsTable(tbl(kind, d))
-    out(ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")), "sizes", "doc_id")
-    out(Dedup.bandsOf(sig), "bands", "bkey")
-    out(sig, "sigs", "doc_id")
-    out(ex, "shingles", "doc_id")
+    out(f.sizes, "sizes", "doc_id")
+    out(f.bands, "bands", "bkey")
+    out(f.sig, "sigs", "doc_id")
+    out(f.ex, "shingles", "doc_id")
     // marker LAST — all docs attempted, including shingle-less ones
     // (< 3 tokens): they have no signature to probe, and committing them
     // stops a retry from re-running their (empty) extraction forever
@@ -179,13 +175,11 @@ object LshIndex {
   }
 
   /** Probe the persisted index with a batch of NEW documents (default:
-    * every non-corpus source, matching q71). Candidates join on `bkey`
-    * ALONE — the band id is hashed INTO bkey (`bkey = xxhash64(band,
-    * mins…)`), so the single bucketed column carries the full band
-    * identity and band equality is just a residual guard; the index side
-    * reads pre-partitioned, only batch bands shuffle. Then the standard
-    * exact pipeline: agreement pre-filter on persisted signatures, exact
-    * Jaccard via persisted shingles. Output ≡ q71 (exhaustive oracle).
+    * every non-corpus source, matching q71): the shared three-stage pair
+    * pipeline with the index as side a and the batch's inline word
+    * features as side b. The index side reads pre-partitioned — its
+    * `bands` are bucketed on the candidate join key `bkey` — so only
+    * batch bands shuffle. Output ≡ q71 (exhaustive oracle).
     */
   def probe(s: SparkSession, d: String, tau: Double = 0.5,
             batchOpt: Option[DataFrame] = None): DataFrame = {
@@ -193,61 +187,34 @@ object LshIndex {
     // Docs ALREADY folded into the index (via append) are dropped from
     // the batch side: an overlapping doc would otherwise sit on both join
     // sides — yielding self-pairs (a==b, jaccard 1.0) and duplicate
-    // doc_id rows in the sizes union that duplicate every pair touching
-    // it. The anti-join makes append-then-probe safe for ANY batch; the
+    // pairs. The anti-join makes append-then-probe safe for ANY batch; the
     // indexed side still reports those docs as near-dups of future ones.
     // Keyed on `committed` — the same artifact append's idempotence keys
     // on, so a doc in the crashed-append limbo (data rows landed, marker
     // not) stays on the BATCH side until its retry commits it (the
-    // residual self-pair risk that creates is guarded in candRaw below).
+    // residual self-pair risk that creates is guarded by `a =!= b`).
     val batch = batchOpt.getOrElse(
         Tables.documents(s, d).filter(!col("source").isin(corpusSources: _*)))
       .join(s.table(tbl("committed", d)).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
-    val sigB = Dedup.signaturesRowLevel(batch).truncated
-    val exB = Dedup.shinglesOf(batch).truncated
-    val idxBands = s.table(tbl("bands", d))
-    val idxSigs = s.table(tbl("sigs", d))
-    val idxEx = s.table(tbl("shingles", d))
-    val idxSizes = s.table(tbl("sizes", d))
-    // Join on bkey ONLY: adding `band` as a key would make Spark demand
-    // co-partitioning on BOTH columns (requireAllClusterKeysForCoPartition)
-    // and re-shuffle the bucketed side. A cross-band bkey equality needs a
-    // 64-bit xxhash collision, and such a phantom candidate is then killed
-    // by agreement + exact verification — correctness is unaffected.
+    // Crash-retry residue (see [[write]]) duplicates a doc's rows in the
+    // data tables. Duplicate band rows only repeat candidates, which
+    // stage 1 de-duplicates; a duplicate signature row repeats a
+    // candidate after stage 2, de-duplicated here; shingles and sizes
+    // are read through de-duplicating views, which the doc_id bucketing
+    // plans with NO exchange.
+    def t(kind: String): DataFrame = s.table(tbl(kind, d))
+    val index = new Dedup.Features(t("bands"), t("sigs"), t("shingles").distinct(),
+      t("sizes").groupBy(col("doc_id")).agg(max(col("sz")).as("sz")),
+      corpusSized = false)
+    val fresh = Dedup.Features.word(batch)
     // a =!= b: a doc whose append crashed pre-marker sits in the index
-    // data tables AND (uncommitted) on the batch side — drop the self-
-    // pair it would otherwise form until its retry commits it.
-    val candRaw = idxBands.as("a").join(Dedup.bandsOf(sigB).as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
+    // data tables AND (uncommitted) on the batch side
+    val cand = Dedup.agreed(
+        Dedup.candidates(index, fresh, col("a.doc_id") =!= col("b.doc_id")),
+        index, fresh, Dedup.verifiableAgreement(tau))
       .dropDuplicates("a", "b")
-    val minAgree = math.max(0,
-      math.ceil((tau - 0.25) * Dedup.MinhashPerms).toInt)
-    // dropDuplicates AFTER the sig joins too: the pair set is tiny, and
-    // it insulates scoring from any duplicated index rows (e.g. a
-    // pre-hardening append retry) — duplicate cand rows would otherwise
-    // multiply `inter`
-    val cand = candRaw
-      .join(idxSigs.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sigB.as("sb"), col("b") === col("sb.doc_id"))
-      .filter(Dedup.agreement("sa", "sb") >= minAgree)
-      .select(col("a"), col("b"))
-      .dropDuplicates("a", "b")
-    // max-agg collapses any duplicated index sizes rows (crash-retry
-    // residue); planned with NO exchange — the table is bucketed by
-    // doc_id, which satisfies the aggregation's clustering requirement
-    val sizes = idxSizes.groupBy(col("doc_id")).agg(max(col("sz")).as("sz"))
-      .unionByName(exB.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-    val candA = idxEx.join(cand, col("doc_id") === col("a"))
-      .select(col("a"), col("b"), col("h"))
-    // DISTINCT h: duplicated index shingle rows must not inflate the
-    // intersection (clean-path ≡ count — shinglesOf emits distinct
-    // (doc_id, h), so (a, b, h) is unique absent crash-retry residue)
-    val inter = candA.join(exB.as("y"),
-        col("y.doc_id") === col("b") && col("y.h") === candA("h"))
-      .groupBy(col("a"), col("b"))
-      .agg(countDistinct(candA("h")).as("inter"))
-    Dedup.joinSizesAndScore(inter, sizes, tau)
+    Dedup.verified(cand, index, fresh, tau)
+      .orderBy("a", "b")
   }
 }

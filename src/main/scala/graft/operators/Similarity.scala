@@ -4,6 +4,7 @@ import graft.Tables
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Similarity search over an embedding column (SURVEY.md §2c).
   *
@@ -246,7 +247,7 @@ object Similarity {
   def knnLshIndexed(s: SparkSession, d: String, queryId: Long = 0L, k: Int = 10,
                     probeRadius: Int = 1): DataFrame = {
     GraftFunctions.register(s)
-    val idx = s.read.parquet(bucketedIndexPath(s, d))
+    val idx = Tables.parquet(s, bucketedIndexPath(s, d))
     // query-vector lookup: one row by vec_id (pushed-down point filter)
     val qRow = idx.filter(col("vec_id") === queryId)
       .select("embedding", "bucket").head()
@@ -340,14 +341,16 @@ object Similarity {
     codebooks.getOrElseUpdate((d, embStamp(d), cells, iters), {
       val cb = ivfStableDir(s, d, cells, iters).resolve("codebook")
       if (java.nio.file.Files.exists(cb.resolve("_SUCCESS")))
-        s.read.parquet(cb.toString).orderBy("cell").collect()
+        Tables.parquet(s, cb.toString).orderBy("cell").collect()
           .map(_.getSeq[Double](1).toArray)
       else {
         val e = graft.Lineage.truncate(
           Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
         val trained = lloydIterations(e, cells, iters)._1
         try writeCodebook(s, trained, cb.toString)
-        catch { case _: Throwable => () } // read-only warehouse: stay in-memory
+        catch { case NonFatal(e) => // e.g. a read-only warehouse: stay in-memory
+          System.err.println(s"similarity: codebook not persisted to $cb: $e")
+        }
         trained
       }
     })
@@ -553,10 +556,10 @@ object Similarity {
                     nprobe: Int = 2, cells: Int = 8, iters: Int = 3): DataFrame = {
     GraftFunctions.register(s)
     val path = ivfIndexPath(s, d, cells, iters)
-    val codebook = s.read.parquet(s"$path/codebook")
+    val codebook = Tables.parquet(s, s"$path/codebook")
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](1).toArray)
-    val idx = s.read.parquet(s"$path/vectors")
+    val idx = Tables.parquet(s, s"$path/vectors")
     val qVec = idx.filter(col("vec_id") === queryId)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble)
     val probes = codebook.zipWithIndex

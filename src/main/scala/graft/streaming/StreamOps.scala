@@ -440,6 +440,7 @@ object StreamOps {
     */
   def nearDupSuppress(s: SparkSession, d: String, tau: Double = 0.5): DataFrame = {
     import graft.operators.Dedup
+    import graft.operators.Dedup.Features
     val minAgree = math.ceil(tau * Dedup.MinhashPerms).toInt
     val work = java.nio.file.Files.createTempDirectory("graft_neardup_")
     work.toFile.deleteOnExit()
@@ -460,35 +461,20 @@ object StreamOps {
           val sb = batch.sparkSession
           // row-local codegen signatures: the per-batch signature stage
           // is a stateless projection, no exchanges
-          val sig = Dedup.signaturesRowLevel(batch).truncated
-          val bands = Dedup.bandsOf(sig)
+          val f = Features.signatures(Dedup.signaturesRowLevel(batch).truncated)
           // batch-internal near-dup clusters, keep-min
-          val candIn = bands.as("a").join(bands.as("b"),
-              col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-            .dropDuplicates("a", "b")
-          val pairsIn = candIn
-            .join(sig.as("sa"), col("a") === col("sa.doc_id"))
-            .join(sig.as("sb"), col("b") === col("sb.doc_id"))
-            .filter(Dedup.agreement("sa", "sb") >= minAgree)
-            .select(col("a"), col("b"))
+          val pairsIn = Dedup.agreed(
+            Dedup.candidates(f, f, col("a.doc_id") < col("b.doc_id")), f, f, minAgree)
           val losers = Dedup.resolveClusters(pairsIn)
             .filter(col("rep") =!= col("doc_id")).select(col("doc_id"))
-          val survivors = sig.join(losers, Seq("doc_id"), "left_anti")
-            .truncated
+          val survivors = Features.signatures(
+            f.sig.join(losers, Seq("doc_id"), "left_anti").truncated)
           // cross-batch: banded probe of the persistent seen-signature table
-          val seen = sb.read.parquet(sigDir)
-          val candX = Dedup.bandsOf(survivors).as("n").join(Dedup.bandsOf(seen).as("o"),
-              col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
-            .select(col("n.doc_id").as("a"), col("o.doc_id").as("b"))
-            .dropDuplicates("a", "b")
-          val suppressed = candX
-            .join(survivors.as("sa"), col("a") === col("sa.doc_id"))
-            .join(seen.as("sb"), col("b") === col("sb.doc_id"))
-            .filter(Dedup.agreement("sa", "sb") >= minAgree)
+          val seen = Features.signatures(sb.read.parquet(sigDir))
+          val suppressed = Dedup.agreed(
+              Dedup.candidates(survivors, seen), survivors, seen, minAgree)
             .select(col("a").as("doc_id")).distinct()
-          val kept = survivors.join(suppressed, Seq("doc_id"), "left_anti")
+          val kept = survivors.sig.join(suppressed, Seq("doc_id"), "left_anti")
             .truncated
           kept.write.mode("append").parquet(sigDir)
           kept.select(col("doc_id"),
@@ -833,7 +819,6 @@ object StreamOps {
     // a warm call trusts the tables: finish any compaction swap that
     // crashed between its DROP and RENAME before reading them
     recoverCorpusCompacting(s, d)
-    val minAgree = math.max(0, math.ceil((tau - 0.25) * Dedup.MinhashPerms).toInt)
     val dir = pacedDir(s, s"$d/documents.parquet", nFiles)
     val schema = graft.Tables.schemaOf(s, dir)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -922,62 +907,23 @@ object StreamOps {
               .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
               .insertInto(corpusTbl(kind, d))
           val batch = batch0.truncated
-          // -- 1. near-dup pair maintenance (over ALL docs, like q51) --
-          val sig = Dedup.signaturesRowLevel(batch).truncated
-          val ex = Dedup.shinglesOf(batch).truncated
-          val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-            .truncated
-          val bands = Dedup.bandsOf(sig)
-          def agreed(cand: DataFrame, sigA: DataFrame): DataFrame = cand
-            .join(sigA.as("sa"), col("a") === col("sa.doc_id"))
-            .join(sig.as("sb"), col("b") === col("sb.doc_id"))
-            .filter(Dedup.agreement("sa", "sb") >= minAgree)
-            .select(col("a"), col("b"))
-          // szA/szB split so the cross-batch case joins each pair side
-          // against ITS sizes table — the state side stays bucketed by
-          // doc_id (no exchange) instead of disappearing into a union
-          def verified(cand: DataFrame, exA: DataFrame, szA: DataFrame,
-                       szB: DataFrame): DataFrame = {
-            val candA = exA.join(cand, col("doc_id") === col("a"))
-              .select(col("a"), col("b"), col("h"))
-            val inter = candA.join(ex.as("y"),
-                col("y.doc_id") === col("b") && col("y.h") === candA("h"))
-              .groupBy(col("a"), col("b"))
-              .agg(count(lit(1)).as("inter"))
-            inter // Dedup.joinSizesAndScore with per-side sizes sources
-              .join(szA.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-              .join(szB.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-              .withColumn("jaccard", round(col("inter").cast("double") /
-                (col("sza") + col("szb") - col("inter")), 4))
-              .filter(col("jaccard") >= tau)
-              .select(col("a"), col("b"))
-          }
-          val candIn = bands.as("a").join(bands.as("b"),
-              col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-            .dropDuplicates("a", "b")
-          val oldSig = readTbl("sigs")
-          val oldEx = readTbl("shingles")
-          val oldSz = readTbl("sizes")
+          // -- 1. near-dup pair maintenance (over ALL docs, like q51): the
+          // batch's word features pair with themselves and with the
+          // accumulated state through the shared three-stage pipeline --
+          val f = Dedup.Features.word(batch)
           // ascending replay ⇒ state doc_ids < batch doc_ids: (a, b) is
           // already the self-join's (smaller, larger) orientation. The
           // state side reads its PERSISTED bands pre-bucketed by bkey —
-          // no recompute from sigs, no state-side shuffle — and the join
-          // keys on bkey ALONE (band identity is hashed into it; adding
-          // `band` would demand co-partitioning on both columns and
-          // re-shuffle the bucketed side — the q106 lesson verbatim).
-          val candX = readTbl("bands").as("a").join(bands.as("b"),
-              col("a.bkey") === col("b.bkey"))
-            .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-            .dropDuplicates("a", "b")
-          writeState(verified(agreed(candIn, sig), ex, sizes, sizes)
-            .unionByName(verified(agreed(candX, oldSig), oldEx,
-              oldSz, sizes)), "pairs")
-          writeTbl(bands, "bands", "bkey")
-          writeTbl(sig, "sigs", "doc_id")
-          writeTbl(ex, "shingles", "doc_id")
-          writeTbl(sizes, "sizes", "doc_id")
+          // no recompute from sigs, no state-side shuffle.
+          val state = new Dedup.Features(readTbl("bands"), readTbl("sigs"),
+            readTbl("shingles"), readTbl("sizes"), corpusSized = false)
+          writeState(Dedup.selfPairs(f, tau)
+            .unionByName(Dedup.nearDupPairs(state, f, lit(true), tau))
+            .select(col("a"), col("b")), "pairs")
+          writeTbl(f.bands, "bands", "bkey")
+          writeTbl(f.sig, "sigs", "doc_id")
+          writeTbl(f.ex, "shingles", "doc_id")
+          writeTbl(f.sizes, "sizes", "doc_id")
           // -- 2. quality gate + exact-dup admission (keep-first) --
           val gated = batch
             .withColumn("n_tokens", size(TextFunctions.tokens(col("text"))).cast("long"))

@@ -1,26 +1,20 @@
 package graft
 
-import graft.operators.{Dedup, DedupIndex}
+import graft.operators.Dedup
+import graft.operators.Dedup.Features
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Equivalence pins for the round-11 index-probe rewiring: every dedup
-  * operator that gained a persisted-index fast path must return rows
-  * IDENTICAL to its recompute twin (`spark.graft.dedup.useIndex=false`)
-  * — the index is a layout for the same deterministic features, never a
-  * different algorithm. Also pins the point of the layout: the probe
-  * form plans strictly fewer exchanges than the recompute form.
+/** Equivalence pins for the persisted dedup feature index: every dedup
+  * operator that reads it must return rows IDENTICAL to the same
+  * pipeline over features recomputed inline from corpus text — the
+  * index is a layout for the same deterministic features, never a
+  * different algorithm. Also pins the point of the layout: the index
+  * (probe) form plans strictly fewer exchanges than the inline
+  * (recompute) form.
   */
 class DedupIndexSpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
-
-  private val Dial = "spark.graft.dedup.useIndex"
-
-  private def withDial[A](v: String)(body: => A): A = {
-    val prev = spark.conf.get(Dial, "true")
-    spark.conf.set(Dial, v)
-    try body finally spark.conf.set(Dial, prev)
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -40,19 +34,51 @@ class DedupIndexSpec extends AnyFunSuite {
     count(df.queryExecution.executedPlan)
   }
 
-  private val ops: Seq[(String, () => DataFrame)] = Seq(
-    ("q51 minhashLsh", () => Dedup.minhashLsh(spark, sf)),
-    ("q53 ngramJaccard", () => Dedup.ngramJaccard(spark, sf)),
-    ("q57 charNgramJaccard", () => Dedup.charNgramJaccard(spark, sf)),
-    ("q82 containmentPairs", () => Dedup.containmentPairs(spark, sf)),
-    ("q52b simhashPairsMirrorable", () => Dedup.simhashPairsMirrorable(spark, sf)))
+  private def docs = Tables.documents(spark, sf)
+
+  /** q53's pipeline over inline word shingles. */
+  private def inlineJaccard(): DataFrame = {
+    val w = Features.word(docs)
+    Dedup.joinSizesAndScore(Dedup.interOf(w.ex, docs, 256), w.sizes, w.sizes, 0.5)
+  }
+
+  /** q52b's pipeline over inline chunks. */
+  private def inlineMirror(): DataFrame =
+    Dedup.chunkPairs(Dedup.mirrorChunksOf(docs), 3)
+
+  // (operator, its form over the index, the same pipeline inline)
+  private val ops: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+    ("q51 minhashLsh", () => Dedup.minhashLsh(spark, sf),
+      () => Dedup.selfPairs(Features.word(docs), 0.5)),
+    ("q53 ngramJaccard", () => Dedup.ngramJaccard(spark, sf), () => inlineJaccard()),
+    ("q57 charNgramJaccard", () => Dedup.charNgramJaccard(spark, sf),
+      () => Dedup.selfPairs(Features.char(docs), 0.6)),
+    ("q82 containmentPairs", () => Dedup.containmentPairs(spark, sf), () => {
+      val w = Features.word(docs)
+      Dedup.containmentOf(Dedup.interOf(w.ex, docs, 256), w.sizes, 0.8)
+    }),
+    ("q52b simhashPairsMirrorable", () => Dedup.simhashPairsMirrorable(spark, sf),
+      () => inlineMirror()))
 
   test("index probe ≡ recompute for every rewired dedup operator") {
-    ops.foreach { case (name, mk) =>
-      val probe = withDial("true") { rows(mk()) }
-      val recompute = withDial("false") { rows(mk()) }
-      assert(probe === recompute, s"$name: index path diverged from recompute")
-      assert(probe.nonEmpty, s"$name: testdata plants near-dups; empty = broken")
+    ops.foreach { case (name, indexed, inline) =>
+      val fromIndex = rows(indexed())
+      assert(fromIndex === rows(inline()), s"$name: index path diverged from inline")
+      assert(fromIndex.nonEmpty, s"$name: testdata plants near-dups; empty = broken")
+    }
+    // and stage by stage: both forms join candidates on bkey alone, so
+    // even the candidate sets are identical
+    import org.apache.spark.sql.functions.col
+    Seq(
+      "word" -> (Features.indexed(spark, sf, Features.WordGrams), Features.word(docs)),
+      "char" -> (Features.indexed(spark, sf, Features.CharGrams), Features.char(docs))
+    ).foreach { case (grams, (x, y)) =>
+      def selfCand(f: Features) = Dedup.candidates(f, f, col("a.doc_id") < col("b.doc_id"))
+      assert(rows(selfCand(x)) === rows(selfCand(y)), s"$grams candidates")
+      assert(rows(Dedup.agreed(selfCand(x), x, x, 16)) ===
+        rows(Dedup.agreed(selfCand(y), y, y, 16)), s"$grams agreed")
+      assert(rows(Dedup.verified(selfCand(x), x, x, 0.5)) ===
+        rows(Dedup.verified(selfCand(y), y, y, 0.5)), s"$grams verified")
     }
   }
 
@@ -82,11 +108,14 @@ class DedupIndexSpec extends AnyFunSuite {
   test("the probe form plans fewer exchanges than the recompute form") {
     // the layout's whole point (§2/§6): bucketed feature tables remove
     // the feature-pipeline exchanges AND the self-join exchanges
-    Seq("q52b" -> ops(4)._2, "q53" -> ops(1)._2).foreach { case (name, mk) =>
-      val probeEx = withDial("true") { exchanges(mk()) }
-      val recomputeEx = withDial("false") { exchanges(mk()) }
-      assert(probeEx < recomputeEx,
-        s"$name: probe plans $probeEx exchanges vs recompute $recomputeEx — layout not used")
+    Seq(
+      ("q52b", () => Dedup.simhashPairsMirrorable(spark, sf), () => inlineMirror()),
+      ("q53", () => Dedup.ngramJaccard(spark, sf), () => inlineJaccard())
+    ).foreach { case (name, indexed, inline) =>
+      val indexEx = exchanges(indexed())
+      val inlineEx = exchanges(inline())
+      assert(indexEx < inlineEx,
+        s"$name: index form plans $indexEx exchanges vs inline $inlineEx — layout not used")
     }
   }
 }
