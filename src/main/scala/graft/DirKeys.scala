@@ -1,8 +1,8 @@
 package graft
 
-/** Canonical short keys for data directories — shared by every module
-  * that namespaces persisted artifacts on an input dir (the LSH index
-  * tables, the persisted IVF index). One definition so a future
+/** Canonical short keys for data directories — the generation keys
+  * [[Persisted]] names every persisted artifact from, and the digests
+  * [[WarehouseGC]] classifies them by. One definition so a future
   * canonicalization fix cannot silently diverge the two key spaces.
   */
 object DirKeys {

@@ -85,8 +85,7 @@ object RetrievalScale {
       }
     }
     def postingsFiles(): Long = {
-      val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-      val p = java.nio.file.Paths.get(wh, operators.Retrieval.tbl("postings", dir))
+      val p = Persisted(s, Persisted.Inverted, dir).dir("postings")
       val walk = java.nio.file.Files.walk(p)
       try walk.filter(f => f.toString.endsWith(".parquet")).count()
       finally walk.close()

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *    dot), so ANN/dedup structure also scales linearly;
   *  - `nation`/`region` stay single-copy (dimensions, referenced by
   *    unoffset nationkeys);
-  *  - `events.ts` stays a raw ns long (read via nanosAsLong), keeping
-  *    the generated dir byte-compatible with `Tables.events`.
+  *  - `events.ts` keeps its source encoding (a TIMESTAMP(NANOS) source
+  *    is read and written as a raw ns long), so the generated dir
+  *    stays readable by `Tables.events`.
   *
   * Usage: runMain graft.Scale <srcDir> <outDir> <factor>
   */
@@ -106,8 +107,8 @@ object Scale {
       .withColumn("l_partkey", off("l_partkey"))
       .withColumn("l_suppkey", off("l_suppkey")).drop("rep"), s"$out/lineitem.parquet")
 
-    // events: ts arrives (and leaves) as raw ns long
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events: a TIMESTAMP(NANOS) ts arrives (and leaves) as raw ns long
+    Tables.admitNanos(s, s"$src/events.parquet")
     if (want("events")) writeSingle(replicated("events")
       .withColumn("event_id", off("event_id"))
       .withColumn("user_id", off("user_id")).drop("rep"), s"$out/events.parquet")

@@ -39,10 +39,9 @@ object StreamCorpusScale {
     // diagnostic; the timing is the measurement).
     def stateFiles(): Long =
       try {
-        val wh = java.nio.file.Paths.get(java.net.URI.create(
-          spark.conf.get("spark.sql.warehouse.dir")).getPath)
+        val st = Persisted(spark, Persisted.CorpusState, sfDir)
         graft.streaming.StreamOps.CorpusStateKinds.map { case (kind, _) =>
-          val dir = wh.resolve(graft.streaming.StreamOps.corpusTbl(kind, sfDir))
+          val dir = st.dir(kind)
           if (!java.nio.file.Files.isDirectory(dir)) 0L
           else {
             val walk = java.nio.file.Files.walk(dir)

@@ -3,7 +3,12 @@ package graft
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -39,17 +44,16 @@ object Tables {
   private type Version = (Seq[(String, Long, Long)], Map[String, String])
   /** One entry per path: the version last seen and its inferred schema. */
   private val schemas = new ConcurrentHashMap[String, (Version, StructType)]
+  /** One entry per path: the leaf files last seen and whether one of
+    * them stores a TIMESTAMP(NANOS) column. */
+  private val nanos = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], Boolean)]
 
   private def inferenceConf(k: String): Boolean =
     k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
       k == "spark.sql.caseSensitive" || k == "spark.sql.sources.partitionColumnTypeInference.enabled"
 
-  /** The schema stock `spark.read.parquet(path)` infers, inferred once
-    * per version of the path's files and inference settings. No lock is
-    * held while inferring: concurrent first loads each infer and agree.
-    * A path that does not exist goes to the stock read, which raises
-    * the stock error. */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
+  /** A path's leaf files, sorted; None when the path does not exist. */
+  private def leavesOf(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // plain FileStatus, not listFiles' LocatedFileStatus: copying a local
@@ -58,17 +62,53 @@ object Tables {
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
       else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
     val root = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
-    root.fold(spark.read.parquet(path).schema) { st =>
-      val version: Version =
-        (leaves(st).sorted, spark.conf.getAll.filter { case (k, _) => inferenceConf(k) })
-      val hit = schemas.get(path)
-      if (hit != null && hit._1 == version) hit._2
-      else {
-        val schema = spark.read.parquet(path).schema
-        schemas.put(path, (version, schema))
-        schema
-      }
+    root.map(leaves(_).sorted)
+  }
+
+  /** The value `memo` holds for `path` at `version`, else `compute`d. */
+  private def memoized[V, T](memo: ConcurrentHashMap[String, (V, T)], path: String,
+                             version: V)(compute: => T): T = {
+    val hit = memo.get(path)
+    if (hit != null && hit._1 == version) hit._2
+    else {
+      val value = compute
+      memo.put(path, (version, value))
+      value
     }
+  }
+
+  /** The schema stock `spark.read.parquet(path)` infers, inferred once
+    * per version of the path's files and inference settings. No lock is
+    * held while inferring: concurrent first loads each infer and agree.
+    * A path that does not exist goes to the stock read, which raises
+    * the stock error. */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    leavesOf(spark, path).fold(spark.read.parquet(path).schema) { files =>
+      val version: Version =
+        (files, spark.conf.getAll.filter { case (k, _) => inferenceConf(k) })
+      memoized(schemas, path, version)(spark.read.parquet(path).schema)
+    }
+
+  /** Turn `spark.sql.legacy.parquet.nanosAsLong` on when a file under
+    * `path` stores a TIMESTAMP(NANOS) column, which Spark reads only as
+    * a raw long; any other file leaves the session's setting alone. The
+    * footers are read once per version of the path's files. */
+  def admitNanos(spark: SparkSession, path: String): Unit = {
+    val found = leavesOf(spark, path).exists(files => memoized(nanos, path, files) {
+      files.map(f => new Path(f._1))
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .exists { f =>
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
+          try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(
+            _.getPrimitiveType.getLogicalTypeAnnotation match {
+              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+              case _ => false
+            })
+          finally reader.close()
+        }
+    })
+    if (found) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
@@ -81,13 +121,13 @@ object Tables {
   /** `events.ts` arrives in one of three parquet encodings depending on
     * who wrote the dir: TIMESTAMP(MICROS) (driver testdata), raw ns
     * BIGINT (the `Scale` generator), or TIMESTAMP(NANOS) (older
-    * testdata, readable only via `nanosAsLong`). Normalize all three to
-    * µs TIMESTAMP_NTZ; the ns path floor-divides in integer arithmetic
-    * (ns since epoch exceeds double's 53-bit mantissa, so no `/ 1000.0`)
-    * — the exact truncation DuckDB applies.
+    * testdata, readable only via `nanosAsLong`: [[admitNanos]]).
+    * Normalize all three to µs TIMESTAMP_NTZ; the ns path floor-divides
+    * in integer arithmetic (ns since epoch exceeds double's 53-bit
+    * mantissa, so no `/ 1000.0`) — the exact truncation DuckDB applies.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    admitNanos(s, s"$d/events.parquet")
     withEventTs(apply(s, d, "events"))
   }
 

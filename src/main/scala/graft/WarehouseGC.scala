@@ -26,22 +26,16 @@ import org.apache.spark.sql.SparkSession
   *  - no `<hex16>_<hex16>` pair at all → a pre-generation-scheme name;
   *    no current code path can ever reconstruct it, delete.
   *
-  * Wired into every index build path (build-time metadata work: one
-  * directory listing + one stamp walk per family) and standalone via
-  * [[Gc]] for maintenance runs.
+  * Run by [[Persisted]] before every build (build-time metadata work:
+  * one directory listing + one stamp walk per source file) and
+  * standalone via [[Gc]] for maintenance runs.
   */
 object WarehouseGC {
 
   /** Family prefix → the source table file whose contentStamp keys its
-    * live generation. Kept in ONE place so a new persisted family must
-    * register here to be swept. */
-  private[graft] val Families: Seq[(String, String)] = Seq(
-    "graft_invidx_" -> "documents.parquet",
-    "graft_lshidx_" -> "documents.parquet",
-    "graft_ddidx_" -> "documents.parquet",
-    "graft_strmcorp_" -> "documents.parquet",
-    "graft_cdcbase_" -> "orders.parquet",
-    "graft_ivfidx_" -> "embeddings.parquet")
+    * live generation, from [[Persisted.Families]]. */
+  private[graft] val Families: Seq[(String, String)] =
+    Persisted.Families.map(f => f.prefix -> f.source)
 
   private val Hex16 = "^[0-9a-f]{16}$"
 
@@ -59,17 +53,6 @@ object WarehouseGC {
         .filter(java.nio.file.Files.isRegularFile(_))
         .map(java.nio.file.Files.size(_)).sum
     } finally walk.close()
-  }
-
-  /** Recursively delete `dir` (the mop-up for external tables and plain
-    * non-catalog artifact dirs after a DROP; byte accounting happens in
-    * [[payloadBytes]] before the drop — see its scaladoc). */
-  private def deleteDir(dir: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(dir)) return
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
   }
 
   /** DROP IF EXISTS with the failure VISIBLE: a race with another drop
@@ -135,13 +118,7 @@ object WarehouseGC {
             }
           }.toSeq
       } finally list.close()
-    mine.foreach { name =>
-      val dir = warehouse.resolve(name)
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    mine.foreach(name => Persisted.delete(warehouse.resolve(name)))
     mine
   }
 
@@ -153,8 +130,7 @@ object WarehouseGC {
     * can diverge from the form the artifact names were minted under
     * (round-8 advice). */
   def registerScratchPurge(s: SparkSession, d: String): Unit = {
-    val wh = java.nio.file.Paths.get(
-      java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath)
+    val wh = Persisted.warehouse(s)
     val pathDig = DirKeys.digest(d)
     sys.addShutdownHook { purgeScratchByDigest(wh, pathDig); () }
   }
@@ -169,8 +145,7 @@ object WarehouseGC {
     * (no `<hex16>_<hex16>` pair) are unknown by construction.
     */
   def pruneUnknown(s: SparkSession, known: Seq[String]): Seq[String] = {
-    val wh = java.nio.file.Paths.get(
-      java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath)
+    val wh = Persisted.warehouse(s)
     if (!java.nio.file.Files.isDirectory(wh)) return Nil
     val digs = known.map(d => DirKeys.digest(d)).toSet
     val list = java.nio.file.Files.list(wh)
@@ -191,7 +166,7 @@ object WarehouseGC {
       val dir = wh.resolve(name)
       bytes += payloadBytes(dir) // before the DROP deletes managed dirs
       dropWarn(s, name)
-      deleteDir(dir)
+      Persisted.delete(dir)
       name
     }
     if (gone.nonEmpty)
@@ -206,33 +181,32 @@ object WarehouseGC {
     * so a live SparkSession cannot be left with a dangling table.
     */
   def sweep(s: SparkSession, d: String): Seq[String] = {
-    val wh = java.nio.file.Paths.get(
-      java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath)
+    val wh = Persisted.warehouse(s)
     if (!java.nio.file.Files.isDirectory(wh)) return Nil
     val pathDig = DirKeys.digest(d)
+    // one stamp walk per distinct source file, not per family
+    val live = Families.map(_._2).distinct.map(src => src ->
+      DirKeys.hex16(DirKeys.contentStamp(java.nio.file.Paths.get(d, src).toString))).toMap
+    val list = java.nio.file.Files.list(wh)
+    val candidates =
+      try {
+        import scala.jdk.CollectionConverters._
+        list.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => Families.exists { case (fam, src) =>
+            n.startsWith(fam) && stale(n, pathDig, live(src)) })
+          .toSeq
+      } finally list.close()
     var bytes = 0L
-    val gone = Families.flatMap { case (fam, src) =>
-      val live = DirKeys.hex16(DirKeys.contentStamp(
-        java.nio.file.Paths.get(d, src).toString))
-      val list = java.nio.file.Files.list(wh)
-      val candidates =
-        try {
-          import scala.jdk.CollectionConverters._
-          list.iterator().asScala.map(_.getFileName.toString)
-            .filter(n => n.startsWith(fam) && stale(n, pathDig, live))
-            .toSeq
-        } finally list.close()
-      candidates.map { name =>
-        // the catalog entry (if this session registered one) points at
-        // the dir we are removing — measure payload FIRST (a managed
-        // table's DROP deletes its dir), then drop, then mop up external
-        // tables and plain (non-catalog) artifact dirs alike
-        val dir = wh.resolve(name)
-        bytes += payloadBytes(dir)
-        dropWarn(s, name)
-        deleteDir(dir)
-        name
-      }
+    val gone = candidates.map { name =>
+      // the catalog entry (if this session registered one) points at
+      // the dir we are removing — measure payload FIRST (a managed
+      // table's DROP deletes its dir), then drop, then mop up external
+      // tables and plain (non-catalog) artifact dirs alike
+      val dir = wh.resolve(name)
+      bytes += payloadBytes(dir)
+      dropWarn(s, name)
+      Persisted.delete(dir)
+      name
     }
     // one visible line per reclaiming sweep, so build/campaign logs show
     // reclamation happening (silent at 50 M scale = ~5 GB invisible)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Persisted, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,14 +46,6 @@ object Cdc {
         col("o_custkey").as("c_ck"), (col("o_totalprice") + 0.5).as("c_price")))
   }
 
-  /** Catalog name of the maintained bucketed ORDERS base for (dir, key).
-    * One table per join key a maintained pipeline actually uses — the
-    * MERGE path keys on `o_orderkey`, the incremental-agg path on
-    * `o_custkey`; bucket layout is per-key by nature.
-    */
-  private[graft] def bucketedOrdersTbl(d: String, key: String): String =
-    s"graft_cdcbase_${key}_${graft.DirKeys.generation(d, "orders.parquet")}"
-
   /** Bucket count sized to the TABLE, not a constant: ~256 MB of source
     * parquet per bucket (floor 32, cap 4096). A bucketed side removes
     * its exchange but also PINS the join's partition count to the bucket
@@ -77,28 +69,19 @@ object Cdc {
     * catalog — offline layout work, the [[LshIndex.buildIndex]] stance):
     * reads are hash-partitioned by `key` at the scan, so the CDC apply's
     * full-outer join (q87) and the incremental agg's groupBy (q93) plan
-    * ZERO exchange on the base side. This is [[Layouts.writeBucketed]]
-    * applied to the engine's own heaviest measured shapes (the 7.3×/7.8×
+    * ZERO exchange on the base side. One table per join key (bucket
+    * layout is per-key by nature): `o_orderkey` for MERGE, `o_custkey`
+    * for the incremental agg. This is [[Layouts.writeBucketed]] applied
+    * to the engine's own heaviest measured shapes (the 7.3×/7.8×
     * full-table-shuffle steps at the 10 000× point).
     */
   private[graft] def bucketedOrders(s: SparkSession, d: String, key: String): DataFrame = {
-    val t = bucketedOrdersTbl(d, key)
-    if (!s.catalog.tableExists(t)) {
-      graft.WarehouseGC.sweep(s, d) // superseded generations die at build time
-      // clear a stale warehouse dir from a previous JVM (in-memory
-      // catalog forgets managed tables on exit; saveAsTable would fail
-      // on the leftover non-empty location)
-      val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-      val loc = java.nio.file.Paths.get(wh, t)
-      if (java.nio.file.Files.exists(loc)) {
-        val walk = java.nio.file.Files.walk(loc)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-      Layouts.writeBucketed(Tables.orders(s, d), t, key, ordersBuckets(s, d))
+    val base = Persisted(s, Persisted.CdcBase, d)
+    val buckets = ordersBuckets(s, d)
+    base.ensure(Seq(key), buckets) {
+      Layouts.writeBucketed(Tables.orders(s, d), base.name(key), key, buckets)
     }
-    s.table(t)
+    base.table(key)
   }
 
   def mergeUpsert(s: SparkSession, d: String): DataFrame =

@@ -337,8 +337,8 @@ object Dedup {
     * plan ZERO exchange and no sort.
     */
   private def hashedShingles(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    DedupIndex.ensureWord(s, d)
-    (s.table(DedupIndex.tbl("wshh", d)), s.table(DedupIndex.tbl("wsizes", d)))
+    val ix = DedupIndex.word(s, d)
+    (ix.table("wshh"), ix.table("wsizes"))
   }
 
   /** Shared candidate machinery for the exact set-overlap family
@@ -541,11 +541,11 @@ object Dedup {
       * zero index-side exchange and corpus text is never read.
       */
     def indexed(s: SparkSession, d: String, grams: Grams): Features = {
-      val prefix = grams match {
-        case WordGrams => DedupIndex.ensureWord(s, d); "w"
-        case CharGrams => DedupIndex.ensureChar(s, d); "c"
+      val (ix, prefix) = grams match {
+        case WordGrams => (DedupIndex.word(s, d), "w")
+        case CharGrams => (DedupIndex.char(s, d), "c")
       }
-      def t(kind: String): DataFrame = s.table(DedupIndex.tbl(prefix + kind, d))
+      def t(kind: String): DataFrame = ix.table(prefix + kind)
       new Features(t("bands"), t("sig"), t("shd"), t("sizes"), corpusSized = true)
     }
   }
@@ -778,8 +778,7 @@ object Dedup {
     // persisted `mchunks` layout (DedupIndex); the timed query is the
     // chunk-equality self-join, which the (ckey, chunk) bucketing plans
     // with zero exchange and no sort.
-    DedupIndex.ensureMirror(s, d)
-    chunkPairs(s.table(DedupIndex.tbl("mchunks", d)), maxHamming)
+    chunkPairs(DedupIndex.mirror(s, d).table("mchunks"), maxHamming)
   }
 
   /** The SimHash candidate self-join (q52, q52b) over a (doc_id,

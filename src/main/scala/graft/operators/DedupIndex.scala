@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Persisted, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persisted FULL-CORPUS dedup feature index — the shared signature /
@@ -34,80 +34,59 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  ckey) bucketed+sorted by (ckey, chunk) — the chunk-equality candidate
   *  self-join is the whole operator, and it plans exchange-free.
   *
-  * Namespacing, freshness (contentStamp generation keys) and GC follow
-  * LshIndex verbatim; `graft_ddidx_` is registered in
-  * [[graft.WarehouseGC.Families]].
+  * Naming, complete-or-rebuild and GC are the [[graft.Persisted]]
+  * lifecycle; each `ensure*` call names its tables from one generation.
   */
 object DedupIndex {
 
   val Buckets = 32
 
-  private[graft] val WordKinds = Seq("wshh", "wshd", "wsizes", "wsig", "wbands")
-  private[graft] val CharKinds = Seq("cshd", "csizes", "csig", "cbands")
-  private[graft] val MirrorKinds = Seq("mchunks")
-
-  private[graft] def tbl(kind: String, d: String): String =
-    s"graft_ddidx_${kind}_${graft.DirKeys.generation(d, "documents.parquet")}"
-
-  private def out(df: DataFrame, name: String,
+  private def out(df: DataFrame, ix: Persisted.Generation, kind: String,
                   bucketCol: String, sortCols: Seq[String]): Unit =
     df.write.bucketBy(Buckets, bucketCol).sortBy(sortCols.head, sortCols.tail: _*)
-      .mode("overwrite").format("parquet").saveAsTable(name)
+      .mode("overwrite").format("parquet").saveAsTable(ix.name(kind))
 
-  /** Complete-or-rebuild (the LshIndex.buildIndex pattern): only a FULL
-    * kind set satisfies the early return — a build that died partway must
-    * be dropped whole, and stale same-name dirs from a previous JVM
-    * (in-memory catalog, round-7 lesson) are cleared before the write.
-    */
   private def ensure(s: SparkSession, d: String, kinds: Seq[String])
-                    (build: => Unit): Unit = synchronized {
-    if (kinds.forall(k => s.catalog.tableExists(tbl(k, d)))) return
-    graft.WarehouseGC.sweep(s, d)
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    kinds.foreach { kind =>
-      if (s.catalog.tableExists(tbl(kind, d)))
-        s.sql(s"DROP TABLE `${tbl(kind, d)}`")
-      val loc = java.nio.file.Paths.get(wh, tbl(kind, d))
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(loc)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-    build
+                    (build: Persisted.Generation => Unit): Persisted.Generation = {
+    val ix = Persisted(s, Persisted.DedupFeatures, d)
+    ix.ensure(kinds, Buckets)(build(ix))
+    ix
   }
 
   /** The fields of one inline [[Dedup.Features]] value, as the
     * `<prefix>shd`/`sizes`/`sig`/`bands` tables [[Dedup.Features.indexed]]
     * reads. */
-  private def outFeatures(f: Dedup.Features, prefix: String, d: String): Unit = {
-    out(f.ex, tbl(prefix + "shd", d), "doc_id", Seq("doc_id", "h"))
-    out(f.sizes, tbl(prefix + "sizes", d), "doc_id", Seq("doc_id"))
-    out(f.sig, tbl(prefix + "sig", d), "doc_id", Seq("doc_id"))
-    out(f.bands, tbl(prefix + "bands", d), "bkey", Seq("bkey"))
+  private def outFeatures(f: Dedup.Features, ix: Persisted.Generation,
+                          prefix: String): Unit = {
+    out(f.ex, ix, prefix + "shd", "doc_id", Seq("doc_id", "h"))
+    out(f.sizes, ix, prefix + "sizes", "doc_id", Seq("doc_id"))
+    out(f.sig, ix, prefix + "sig", "doc_id", Seq("doc_id"))
+    out(f.bands, ix, prefix + "bands", "bkey", Seq("bkey"))
   }
 
   /** Word 3-gram tables: the word features plus their shingles
     * re-bucketed by `h` (`wshh`). */
-  def ensureWord(s: SparkSession, d: String): Unit =
-    ensure(s, d, WordKinds) {
+  private[graft] def word(s: SparkSession, d: String): Persisted.Generation =
+    ensure(s, d, Seq("wshh", "wshd", "wsizes", "wsig", "wbands")) { ix =>
       val f = Dedup.Features.word(Tables.documents(s, d))
-      out(f.ex, tbl("wshh", d), "h", Seq("h"))
-      outFeatures(f, "w", d)
+      out(f.ex, ix, "wshh", "h", Seq("h"))
+      outFeatures(f, ix, "w")
     }
 
   /** Char 5-gram (stride 2) tables — q57's feature set. */
-  def ensureChar(s: SparkSession, d: String): Unit =
-    ensure(s, d, CharKinds) {
-      outFeatures(Dedup.Features.char(Tables.documents(s, d)), "c", d)
+  private[graft] def char(s: SparkSession, d: String): Persisted.Generation =
+    ensure(s, d, Seq("cshd", "csizes", "csig", "cbands")) { ix =>
+      outFeatures(Dedup.Features.char(Tables.documents(s, d)), ix, "c")
     }
 
   /** Mirror-simhash chunk table — q52b's candidate key set. */
-  def ensureMirror(s: SparkSession, d: String): Unit =
-    ensure(s, d, MirrorKinds) {
-      out(Dedup.mirrorChunksOf(Tables.documents(s, d)),
-        tbl("mchunks", d), "ckey", Seq("ckey", "chunk"))
+  private[graft] def mirror(s: SparkSession, d: String): Persisted.Generation =
+    ensure(s, d, Seq("mchunks")) { ix =>
+      out(Dedup.mirrorChunksOf(Tables.documents(s, d)), ix, "mchunks",
+        "ckey", Seq("ckey", "chunk"))
     }
+
+  def ensureWord(s: SparkSession, d: String): Unit = word(s, d)
+  def ensureChar(s: SparkSession, d: String): Unit = char(s, d)
+  def ensureMirror(s: SparkSession, d: String): Unit = mirror(s, d)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Persisted, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -52,20 +52,8 @@ object Retrieval {
 
   private val IndexKinds = Seq("postings", "stats", "committed")
 
-  /** Freshness stamp of the corpus the index covers: a regenerated
-    * documents.parquet rolls every index table name (the Similarity
-    * codebook convention), so a stale index can never be reattached
-    * against new rows — the round-6 lesson generalized.
-    */
-  private def docStamp(d: String): String =
-    graft.DirKeys.contentStamp(
-      java.nio.file.Paths.get(d, "documents.parquet").toString)
-
-  /** `<pathdigest>_<stampdigest>` — the split generation key lets
-    * [[graft.WarehouseGC]] delete superseded generations (see
-    * [[graft.DirKeys.generation]]). */
-  private[graft] def tbl(kind: String, d: String): String =
-    s"graft_invidx_${kind}_${graft.DirKeys.generation(d, "documents.parquet")}"
+  /** One name, for one-off lookups; lifecycle code uses a handle. */
+  private[graft] def tbl(kind: String, d: String): String = Persisted.Inverted.name(d, kind)
 
   /** (doc_id, dl, token) occurrences — dl (whitespace-token doc length)
     * rides the explode so tf aggregation can carry it as `max(dl)` and
@@ -126,9 +114,10 @@ object Retrieval {
     */
   private[graft] def writeSegment(s: SparkSession, docs: DataFrame, d: String,
                                   mode: String, marker: Boolean = true): Unit = {
+    val ix = Persisted(s, Persisted.Inverted, d)
     tfOf(occurrences(docs))
       .write.bucketBy(Buckets, "token").sortBy("token")
-      .mode(mode).format("parquet").saveAsTable(tbl("postings", d))
+      .mode(mode).format("parquet").saveAsTable(ix.name("postings"))
     docs
       .select(col("doc_id"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("dl"))
@@ -138,124 +127,63 @@ object Retrieval {
       .agg(coalesce(expr("bit_xor(xxhash64(doc_id))"), lit(0L)).as("seg_key"),
         count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .write.mode(mode).format("parquet").saveAsTable(tbl("stats", d))
+      .write.mode(mode).format("parquet").saveAsTable(ix.name("stats"))
     if (marker)
       docs.select(col("doc_id")).distinct()
         .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-        .mode(mode).format("parquet").saveAsTable(tbl("committed", d))
+        .mode(mode).format("parquet").saveAsTable(ix.name("committed"))
   }
-
-  /** Standalone layout-metadata file next to the index tables (NOT
-    * inside any table dir, so compaction's staging+rename churn can
-    * never lose it): records the bucket count the postings/committed
-    * layouts were written with. Written once per fresh build — before
-    * any append can exist — and asserted at reattach: a reattach under
-    * a DIFFERENT source [[Buckets]] would otherwise declare the wrong
-    * bucket count in its DDL and bucket pruning would return WRONG (not
-    * just slow) probe results. Mismatch or absence → rebuild (cost, not
-    * a correctness event).
-    */
-  private def metaPath(s: SparkSession, d: String): java.nio.file.Path = {
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    java.nio.file.Paths.get(wh, tbl("meta", d))
-  }
-
-  private def writeMeta(s: SparkSession, d: String): Unit =
-    java.nio.file.Files.write(metaPath(s, d),
-      s"buckets=$Buckets\n".getBytes("UTF-8"))
-
-  private def metaBuckets(s: SparkSession, d: String): Option[Int] =
-    try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(metaPath(s, d)), "UTF-8")
-      txt.linesIterator.collectFirst {
-        case l if l.startsWith("buckets=") => l.stripPrefix("buckets=").trim.toInt
-      }
-    } catch { case _: java.io.IOException => None }
 
   /** Re-register the index in a fresh session's catalog when its
     * warehouse directories survive from a previous JVM. The sandbox's
     * in-memory catalog forgets table metadata on exit (a production
     * metastore would not), and before this existed every new JVM
     * re-paid the full corpus build — 2428 s at 50 M docs, measured.
-    * Only a COMPLETE index is reattached: the `committed` marker table
-    * is written LAST (with a `_SUCCESS` sentinel), so its presence
-    * proves the original build finished, and the layout meta file must
-    * agree with the compiled-in [[Buckets]] (see [[metaPath]] — a wrong
-    * bucket declaration breaks pruning correctness, not just speed);
-    * anything less falls through to [[buildIndex]]'s clear-and-rebuild.
+    * [[graft.Persisted]] calls this only for a generation whose
+    * sentinel proves a complete build with this [[Buckets]] count: a
+    * reattach under a different count would declare the wrong bucket
+    * count in its DDL and bucket pruning would return WRONG probe rows.
     * The DDL mirrors [[writeSegment]]'s layout exactly (same bucket
-    * spec ⇒ probes keep their ≤|terms| bucket pruning). Returns true
-    * when attached. NOTE: reattach proves the index is a COMPLETE build
-    * over *some* committed doc set — corpus EQUIVALENCE is a separate
-    * contract enforced by [[ensureCorpusExact]] on the registry path
-    * (an appended-to index is legitimate for the maintained-lifecycle
-    * API, wrong for q113b).
+    * spec ⇒ probes keep their ≤|terms| bucket pruning). NOTE: reattach
+    * proves the index is a COMPLETE build over *some* committed doc set
+    * — corpus EQUIVALENCE is a separate contract enforced by
+    * [[ensureCorpusExact]] on the registry path (an appended-to index
+    * is legitimate for the maintained-lifecycle API, wrong for q113b).
     */
-  private[graft] def reattachIndex(s: SparkSession, d: String): Boolean = {
-    if (IndexKinds.forall(k => s.catalog.tableExists(tbl(k, d)))) return true
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    def dirOf(kind: String) = java.nio.file.Paths.get(wh, tbl(kind, d))
-    val complete =
-      IndexKinds.forall(k => java.nio.file.Files.exists(dirOf(k))) &&
-        java.nio.file.Files.exists(dirOf("committed").resolve("_SUCCESS")) &&
-        metaBuckets(s, d).contains(Buckets)
-    if (!complete) return false
-    def ddl(kind: String, cols: String, bucketKey: String): Unit =
-      if (!s.catalog.tableExists(tbl(kind, d)))
-        s.sql(s"CREATE TABLE `${tbl(kind, d)}` ($cols) USING parquet " +
-          (if (bucketKey.nonEmpty)
-             s"CLUSTERED BY ($bucketKey) SORTED BY ($bucketKey) INTO $Buckets BUCKETS "
-           else "") +
-          s"LOCATION '${dirOf(kind).toUri}'")
-    ddl("postings", "doc_id BIGINT, token STRING, tf BIGINT, dl BIGINT", "token")
-    ddl("stats", "seg_key BIGINT, n_docs BIGINT, sum_dl BIGINT", "")
-    ddl("committed", "doc_id BIGINT", "doc_id")
-    true
-  }
-
-  /** Drop every index table (catalog + leftover warehouse dir + any
-    * `_compacting` staging + the meta file) for `d` — the clear half of
-    * clear-and-rebuild. Staging dirs must go too, or the next
-    * [[recoverCompacting]] would resurrect the cleared index from them.
-    */
-  private def clearIndex(s: SparkSession, d: String): Unit = {
-    IndexKinds.foreach { kind =>
-      Seq(tbl(kind, d), tbl(kind, d) + "_compacting").foreach { t =>
-        if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE `$t`")
-        clearLeftoverDir(s, t)
-      }
+  private def reattach(ix: Persisted.Generation): Boolean =
+    IndexKinds.forall(k => java.nio.file.Files.exists(ix.dir(k))) && {
+      def ddl(kind: String, cols: String, bucketKey: String): Unit =
+        if (!ix.registered(kind))
+          ix.s.sql(s"CREATE TABLE `${ix.name(kind)}` ($cols) USING parquet " +
+            (if (bucketKey.nonEmpty)
+               s"CLUSTERED BY ($bucketKey) SORTED BY ($bucketKey) INTO $Buckets BUCKETS "
+             else "") +
+            s"LOCATION '${ix.dir(kind).toUri}'")
+      ddl("postings", "doc_id BIGINT, token STRING, tf BIGINT, dl BIGINT", "token")
+      ddl("stats", "seg_key BIGINT, n_docs BIGINT, sum_dl BIGINT", "")
+      ddl("committed", "doc_id BIGINT", "doc_id")
+      true
     }
-    java.nio.file.Files.deleteIfExists(metaPath(s, d))
+
+  /** The index of `d`: served, reattached ([[reattach]]) or built over
+    * the EXISTING corpus through the [[graft.Persisted]] lifecycle. */
+  private def index(ix: Persisted.Generation): Persisted.Generation = {
+    ix.ensure(IndexKinds, Buckets, () => reattach(ix)) {
+      writeSegment(ix.s, Tables.documents(ix.s, ix.d), ix.d, "overwrite")
+    }
+    ix
   }
 
-  /** Build the index over the EXISTING corpus, once per catalog. Gate
-    * and stale-warehouse-dir recovery follow LshIndex: complete only if
-    * ALL tables are registered (a build that died partway must not
-    * satisfy the early return). A complete index surviving from a
-    * previous JVM is REATTACHED ([[reattachIndex]]) instead of rebuilt;
-    * only an incomplete leftover (a build that died partway) is cleared
-    * and rebuilt (rebuild cost, not a correctness event). */
-  def buildIndex(s: SparkSession, d: String): Unit = {
-    recoverCompacting(s, d)
-    if (reattachIndex(s, d)) return
-    // a (re)build means every previous generation of this dir's
-    // persisted artifacts is superseded — reclaim them (build-time
-    // metadata work, never on the reattach/probe path)
-    graft.WarehouseGC.sweep(s, d)
-    clearIndex(s, d)
-    writeSegment(s, Tables.documents(s, d), d, "overwrite")
-    writeMeta(s, d)
-  }
+  def buildIndex(s: SparkSession, d: String): Unit =
+    index(Persisted(s, Persisted.Inverted, d))
 
-  /** Per-JVM memo of (canonical dir, corpus stamp) pairs whose index
-    * has been VERIFIED corpus-exact, so repeated registry probes pay the
-    * corpus id-scan once per session, not once per query. [[append]]
+  /** Per-JVM memo of the generations whose index has been VERIFIED
+    * corpus-exact, so repeated registry probes pay the corpus id-scan
+    * once per session, not once per query. [[append]]
     * removes its entry — the index then legitimately holds more than
     * the corpus and the registry contract no longer holds.
     */
-  private val verifiedExact =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
+  private val verifiedExact = scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Order-insensitive identity of a doc_id set: (count, xor of
     * xxhash64(doc_id)) — the seg_key convention. Exact for set
@@ -276,17 +204,18 @@ object Retrieval {
     * mismatch. This is the round-6 q113b regression fix: reattach
     * proves build completeness, never corpus equivalence.
     */
-  private[graft] def ensureCorpusExact(s: SparkSession, d: String): Unit = {
-    val key = (graft.DirKeys.canonical(d), docStamp(d))
-    if (verifiedExact.contains(key)) return
-    buildIndex(s, d)
-    val idx = idFold(s.table(tbl("committed", d)).select(col("doc_id")))
-    val corpus = idFold(Tables.documents(s, d).select(col("doc_id")))
-    if (idx != corpus) {
-      clearIndex(s, d) // staging dirs included: nothing can resurrect
-      buildIndex(s, d)
+  private[graft] def ensureCorpusExact(s: SparkSession, d: String): Persisted.Generation = {
+    val ix = Persisted(s, Persisted.Inverted, d)
+    if (!verifiedExact.contains(ix.key)) {
+      index(ix)
+      val idx = idFold(ix.table("committed").select(col("doc_id")))
+      if (idx != idFold(Tables.documents(s, d).select(col("doc_id")))) {
+        ix.invalidate(IndexKinds)
+        index(ix) // clears staging too: nothing can resurrect
+      }
+      verifiedExact.put(ix.key, ())
     }
-    verifiedExact.put(key, ())
+    ix
   }
 
   /** Fold a new batch into the index: later probes score over corpus +
@@ -295,142 +224,45 @@ object Retrieval {
     * crashed before its marker landed is RETRIED, and the duplicate
     * rows that can leave are probe-guarded (see [[writeSegment]]). */
   def append(s: SparkSession, docs: DataFrame, d: String): Unit = {
-    buildIndex(s, d)
-    val fresh = docs.join(s.table(tbl("committed", d)).select(col("doc_id")),
+    val ix = index(Persisted(s, Persisted.Inverted, d))
+    val fresh = docs.join(ix.table("committed").select(col("doc_id")),
       Seq("doc_id"), "left_anti")
     writeSegment(s, fresh, d, "append")
     // the index may now hold more than the corpus: the registry path
     // must re-verify (and rebuild) before serving q113b from it
-    verifiedExact.remove((graft.DirKeys.canonical(d), docStamp(d)))
+    verifiedExact.remove(ix.key)
   }
-
-  /** Delete a table's leftover warehouse DIRECTORY after its catalog
-    * entry is gone. Needed on the reattached-external path: DROP TABLE
-    * on an external table keeps its data dir, and the staging RENAME
-    * (a managed-table directory move) would collide with it. Safe by
-    * construction at both call sites: the compacted copy of every row
-    * already lives in the staging table before the old dir is removed.
-    */
-  private def clearLeftoverDir(s: SparkSession, tableName: String): Unit = {
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    val loc = java.nio.file.Paths.get(wh, tableName)
-    if (java.nio.file.Files.exists(loc)) {
-      val walk = java.nio.file.Files.walk(loc)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
-
-  /** Finish a compaction interrupted between DROP and RENAME — the
-    * compacted data survives in the staging table, so complete the
-    * rename instead of letting [[buildIndex]] declare the set partial
-    * and rebuild from the corpus, silently discarding appended batches.
-    *
-    * Two recovery levels. Catalog-level covers a failure INSIDE this
-    * JVM (the staging table is still registered). Filesystem-level
-    * covers a crash + RESTART: the fresh JVM's in-memory catalog knows
-    * neither table, so the surviving `<t>_compacting` warehouse dir is
-    * all the evidence there is — without this branch, [[reattachIndex]]
-    * would see the main dir missing, declare the index incomplete, and
-    * silently rebuild from the corpus, discarding every appended batch
-    * (the exact loss reattach exists to prevent).
-    *
-    * Who wins when BOTH dirs survive is decided by the main dir's
-    * `_SUCCESS` sentinel, which [[compact]] deletes FIRST — before any
-    * DROP — so its presence proves compaction never got past staging
-    * for this kind. Main-with-`_SUCCESS` ⇒ main is current (the staging
-    * dir is a stale content-equal-or-older copy; promoting it could
-    * discard batches appended AFTER an earlier recovered crash) → drop
-    * staging. Main missing or sentinel-less ⇒ the complete staged copy
-    * (its own `_SUCCESS` proves the write job committed before any DROP
-    * ran) is the only valid table → promote it. A staged dir without
-    * `_SUCCESS` is an incomplete write and is removed.
-    */
-  private def recoverCompacting(s: SparkSession, d: String): Unit =
-    IndexKinds.foreach { kind =>
-      val t = tbl(kind, d)
-      val tmp = t + "_compacting"
-      if (!s.catalog.tableExists(t) && s.catalog.tableExists(tmp)) {
-        clearLeftoverDir(s, t) // external DROP leaves its dir behind
-        s.sql(s"ALTER TABLE `$tmp` RENAME TO `$t`")
-      } else if (!s.catalog.tableExists(t) && !s.catalog.tableExists(tmp)) {
-        val wh = java.net.URI.create(
-          s.conf.get("spark.sql.warehouse.dir")).getPath
-        val tDir = java.nio.file.Paths.get(wh, t)
-        val tmpDir = java.nio.file.Paths.get(wh, tmp)
-        if (java.nio.file.Files.exists(tmpDir)) {
-          if (!java.nio.file.Files.exists(tmpDir.resolve("_SUCCESS")))
-            clearLeftoverDir(s, tmp) // incomplete staging write
-          else if (java.nio.file.Files.exists(tDir.resolve("_SUCCESS")))
-            clearLeftoverDir(s, tmp) // main current: staging is stale
-          else {
-            clearLeftoverDir(s, t) // sentinel-less main = mid-replacement
-            java.nio.file.Files.move(tmpDir, tDir)
-          }
-        }
-      } else if (s.catalog.tableExists(t) && !s.catalog.tableExists(tmp)) {
-        // main is catalog-current (reattach runs AFTER this recovery, so
-        // a registered t postdates any staging dir): remove the stale
-        // staging dir or the next compaction's staging write collides
-        clearLeftoverDir(s, tmp)
-      }
-    }
 
   /** Compact after many appends: each append adds one file set per
     * bucket; rewrite each table bucket-complete (same bucket spec ⇒
-    * probes keep their pruning) via staging + atomic catalog rename —
-    * the same dance as LshIndex.compact, including pinning bucketed
-    * scans ON for the rewrite so the writer lands one file per bucket.
-    * The stats segment rows are collapsed to one exact total row. */
+    * probes keep their pruning) through the [[graft.Persisted]] staging
+    * swap. */
   def compact(s: SparkSession, d: String): Unit = {
-    recoverCompacting(s, d)
-    val AutoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = s.conf.get(AutoKey)
-    s.conf.set(AutoKey, "false")
-    try IndexKinds.foreach { kind =>
-      val t = tbl(kind, d)
-      if (s.catalog.tableExists(t)) {
-        val tmp = t + "_compacting"
-        if (s.catalog.tableExists(tmp)) s.sql(s"DROP TABLE `$tmp`")
-        val w = kind match {
-          case "stats" =>
-            // drop retry-duplicate rows but NEVER fold segments into one
-            // row: a batch whose append crashed pre-marker, was swept in
-            // by this compaction, and is then RETRIED must still dedup
-            // against its original segment row by seg_key — folding
-            // would destroy the key and double-count it in N/avgdl. One
-            // row per crawl is not a small-files problem — which is also
-            // why the rewrite coalesces to ONE file: unbucketed, its
-            // file count would otherwise be shuffle/AQE-dependent, and a
-            // post-compact count above [[Buckets]] would make every
-            // compactIfNeeded re-trigger the full rewrite forever
-            // (round-8 advice).
-            s.table(t).dropDuplicates("seg_key").coalesce(1).write
-          case "postings" =>
-            s.table(t)
-              .groupBy(col("doc_id"), col("token"))
-              .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
-              .select(col("doc_id"), col("token"), col("tf"), col("dl"))
-              .write.bucketBy(Buckets, "token").sortBy("token")
-          case _ =>
-            s.table(t).distinct()
-              .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-        }
-        w.format("parquet").mode("overwrite").saveAsTable(tmp)
-        // invalidate main BEFORE dropping it: from here until the RENAME
-        // lands, the staged copy is the authoritative table, and a
-        // crash-recovery ([[recoverCompacting]]) keys "who wins" on
-        // exactly this sentinel
-        val wh = java.net.URI.create(
-          s.conf.get("spark.sql.warehouse.dir")).getPath
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(wh, t).resolve("_SUCCESS"))
-        s.sql(s"DROP TABLE `$t`")
-        clearLeftoverDir(s, t) // external DROP leaves its dir behind
-        s.sql(s"ALTER TABLE `$tmp` RENAME TO `$t`")
+    val ix = Persisted(s, Persisted.Inverted, d)
+    IndexKinds.foreach(kind => ix.rewrite(kind) { t =>
+      kind match {
+        case "stats" =>
+          // drop retry-duplicate rows but NEVER fold segments into one
+          // row: a batch whose append crashed pre-marker, was swept in
+          // by this compaction, and is then RETRIED must still dedup
+          // against its original segment row by seg_key — folding
+          // would destroy the key and double-count it in N/avgdl. One
+          // row per crawl is not a small-files problem — which is also
+          // why the rewrite coalesces to ONE file: unbucketed, its
+          // file count would otherwise be shuffle/AQE-dependent, and a
+          // post-compact count above [[Buckets]] would make every
+          // compactIfNeeded re-trigger the full rewrite forever
+          // (round-8 advice).
+          t.dropDuplicates("seg_key").coalesce(1).write
+        case "postings" =>
+          t.groupBy(col("doc_id"), col("token"))
+            .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
+            .select(col("doc_id"), col("token"), col("tf"), col("dl"))
+            .write.bucketBy(Buckets, "token").sortBy("token")
+        case _ =>
+          t.distinct().write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
       }
-    } finally s.conf.set(AutoKey, prevAuto)
+    })
   }
 
   /** [[compact]] only when it would change the layout. A bucketed
@@ -445,10 +277,10 @@ object Retrieval {
     * (second call on an unchanged index returns false).
     */
   def compactIfNeeded(s: SparkSession, d: String): Boolean = {
-    recoverCompacting(s, d)
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    def dataFiles(t: String): Long = {
-      val dir = java.nio.file.Paths.get(wh, t)
+    val ix = Persisted(s, Persisted.Inverted, d)
+    ix.recover(IndexKinds)
+    def dataFiles(kind: String): Long = {
+      val dir = ix.dir(kind)
       if (!java.nio.file.Files.isDirectory(dir)) 0L
       else {
         val walk = java.nio.file.Files.list(dir)
@@ -460,10 +292,7 @@ object Retrieval {
         finally walk.close()
       }
     }
-    val needed = IndexKinds.exists { kind =>
-      val t = tbl(kind, d)
-      s.catalog.tableExists(t) && dataFiles(t) > Buckets
-    }
+    val needed = IndexKinds.exists(kind => ix.registered(kind) && dataFiles(kind) > Buckets)
     if (needed) compact(s, d)
     needed
   }
@@ -475,8 +304,8 @@ object Retrieval {
     * crash recovery [[buildIndex]] does first, so an interrupted
     * compaction does not masquerade as a missing index. */
   def reattachOrFail(s: SparkSession, d: String): Unit = {
-    recoverCompacting(s, d)
-    require(reattachIndex(s, d),
+    val ix = Persisted(s, Persisted.Inverted, d)
+    require(ix.current(IndexKinds, Buckets, () => reattach(ix)),
       s"no complete index generation to reattach for $d — " +
         "run a build first (RetrievalScale <dir> 0)")
   }
@@ -534,16 +363,17 @@ object Retrieval {
   def bm25Indexed(s: SparkSession, d: String, terms: Seq[String] = DefaultTerms,
                   k1: Double = K1, b: Double = B, topN: Int = 10,
                   validateCorpus: Boolean = true): DataFrame = {
-    if (validateCorpus) ensureCorpusExact(s, d) else buildIndex(s, d)
+    val ix =
+      if (validateCorpus) ensureCorpusExact(s, d) else index(Persisted(s, Persisted.Inverted, d))
     // retry-duplicate guard: a crashed-then-retried append can leave a
     // doc's posting rows twice; tf/dl are identical copies, so max ≡
     // first and the fold is exact
-    val p = s.table(tbl("postings", d))
+    val p = ix.table("postings")
       .filter(col("token").isin(terms: _*))
       .groupBy(col("doc_id"), col("token"))
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
     val dfreq = p.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val stats = s.table(tbl("stats", d))
+    val stats = ix.table("stats")
       .groupBy(col("seg_key")) // retried segment rows share their key
       .agg(max(col("n_docs")).as("n"), max(col("sum_dl")).as("s"))
       .agg(sum(col("n")).cast("double").as("n_docs"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Persisted, Tables}
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -259,7 +259,7 @@ object Similarity {
     * a deployment stores next to its vector index.
     */
   private val codebooks = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Array[Array[Double]]]
+    .empty[(String, Int, Int), Array[Array[Double]]]
 
   /** True IVF ANN: a k-means-trained codebook (not random hyperplanes)
     * partitions the corpus into cells; a query ranks the CENTROIDS
@@ -302,29 +302,13 @@ object Similarity {
       .limit(k)
   }
 
-  /** Stable on-disk home for the persisted IVF artifacts of
-    * (dir, cells, iters): under the warehouse, keyed by a sha-256 prefix
-    * of the canonicalized data dir PLUS the embeddings file's size+mtime
-    * — a regenerated testdata dir (the driver does this between rounds)
-    * gets a fresh key instead of silently reusing a codebook trained on
-    * the old vectors.
-    */
-  /** Size+mtime stamp of the embeddings file — the freshness component of
-    * every IVF artifact key (on-disk path AND the JVM caches below): a
-    * regenerated testdata dir must roll the key everywhere, or a live JVM
-    * keeps serving a codebook trained on the old vectors (round-4 find:
-    * the disk path rolled but the in-memory `codebooks` key did not).
+  /** Size+mtime stamp of the embeddings file — the freshness key of the
+    * in-flight bucket index above: a regenerated testdata dir must roll
+    * it, or a live JVM keeps serving an index over the old vectors.
     */
   private def embStamp(d: String): String =
     graft.DirKeys.contentStamp(
       java.nio.file.Paths.get(d, "embeddings.parquet").toString)
-
-  private def ivfStableDir(s: SparkSession, d: String, cells: Int,
-                           iters: Int): java.nio.file.Path = {
-    val gen = graft.DirKeys.generation(d, "embeddings.parquet")
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    java.nio.file.Paths.get(wh, s"graft_ivfidx_${gen}_${cells}_$iters")
-  }
 
   /** Trained codebook for (dir, cells, iters) — the offline-training
     * artifact every IVF/semantic consumer shares. Resolution order:
@@ -334,26 +318,31 @@ object Similarity {
     * the cold-start fallback, which then persists the model for every
     * later session. Training is engine-exact (integer-grid Lloyd), so
     * read-back vs retrain are bit-identical — q76 ≡ q76b bridge either
-    * way.
+    * way. The JVM cache key and the persisted name both carry the
+    * embeddings generation: a regenerated file retrains, in a live JVM
+    * too.
     */
   private[graft] def trainedCodebook(s: SparkSession, d: String, cells: Int,
-                                     iters: Int): Array[Array[Double]] =
-    codebooks.getOrElseUpdate((d, embStamp(d), cells, iters), {
-      val cb = ivfStableDir(s, d, cells, iters).resolve("codebook")
-      if (java.nio.file.Files.exists(cb.resolve("_SUCCESS")))
-        Tables.parquet(s, cb.toString).orderBy("cell").collect()
-          .map(_.getSeq[Double](1).toArray)
-      else {
+                                     iters: Int): Array[Array[Double]] = {
+    val ivf = Persisted(s, Persisted.Ivf, d)
+    codebooks.getOrElseUpdate((ivf.key, cells, iters), {
+      val kind = s"codebook${cells}x$iters"
+      var trained: Option[Array[Array[Double]]] = None
+      // path-based, not a catalog table: the sentinel plus the dir is
+      // the whole proof
+      val onDisk = () => java.nio.file.Files.isDirectory(ivf.dir(kind))
+      try ivf.ensure(Seq(kind), attach = onDisk) {
         val e = graft.Lineage.truncate(
           Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-        val trained = lloydIterations(e, cells, iters)._1
-        try writeCodebook(s, trained, cb.toString)
-        catch { case NonFatal(e) => // e.g. a read-only warehouse: stay in-memory
-          System.err.println(s"similarity: codebook not persisted to $cb: $e")
-        }
-        trained
+        trained = Some(lloydIterations(e, cells, iters)._1)
+        writeCodebook(s, trained.get, ivf.dir(kind).toString)
+      } catch { case NonFatal(e) if trained.isDefined => // e.g. a read-only warehouse
+        System.err.println(s"similarity: codebook not persisted to ${ivf.dir(kind)}: $e")
       }
+      trained.getOrElse(Tables.parquet(s, ivf.dir(kind).toString).orderBy("cell")
+        .collect().map(_.getSeq[Double](1).toArray))
     })
+  }
 
   /** Persist a codebook as its (cell, centroid) table — model-sized. */
   private def writeCodebook(s: SparkSession, codebook: Array[Array[Double]],
@@ -498,12 +487,6 @@ object Similarity {
     semDedup(s, d, cellsFor(n, targetPerCell), iters, tau)
   }
 
-  /** Persisted IVF index dirs, keyed like [[codebooks]] (embeddings stamp
-    * included — same staleness argument).
-    */
-  private val ivfIndexDirs = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), String]
-
   /** Materialize the IVF index the way a deployment stores it: the
     * vectors parquet PARTITIONED BY assigned cell (probe sets prune at
     * file listing, the [[buildBucketedIndex]] contract) plus the trained
@@ -517,33 +500,23 @@ object Similarity {
     val codebook = trainedCodebook(s, d, cells, iters)
     cellAssign(codebook, Tables.embeddings(s, d))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$out/vectors")
-    // trainedCodebook's cold path already persisted the model at the
-    // STABLE location; only write again for a custom out dir (where a
-    // stale file could otherwise linger)
-    if (java.nio.file.Paths.get(out).toAbsolutePath.normalize !=
-        ivfStableDir(s, d, cells, iters).toAbsolutePath.normalize ||
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$out/codebook/_SUCCESS")))
-      writeCodebook(s, codebook, s"$out/codebook")
+    writeCodebook(s, codebook, s"$out/codebook")
   }
 
-  /** Resolve (building if needed) the persisted index at its STABLE
-    * location — reused across JVMs, like a deployment's index next to the
-    * corpus. Completeness is gated on BOTH artifacts' _SUCCESS markers
-    * (a build killed mid-write must rebuild, not half-serve), the
-    * LshIndex.buildIndex lesson.
+  /** Resolve (building if needed) the persisted index at its stable
+    * warehouse location, reused across JVMs like a deployment's index
+    * next to the corpus: a [[graft.Persisted]] kind whose dir holds the
+    * `vectors` and `codebook` artifacts.
     */
-  private def ivfIndexPath(s: SparkSession, d: String, cells: Int, iters: Int): String =
-    ivfIndexDirs.getOrElseUpdate((d, embStamp(d), cells, iters), {
-      val p = ivfStableDir(s, d, cells, iters)
-      val complete = java.nio.file.Files.exists(p.resolve("vectors/_SUCCESS")) &&
-        java.nio.file.Files.exists(p.resolve("codebook/_SUCCESS"))
-      if (!complete) {
-        graft.WarehouseGC.sweep(s, d) // superseded generations die at build time
-        buildIvfIndex(s, d, p.toString, cells, iters)
-      }
-      p.toString
-    })
+  private def ivfIndexPath(s: SparkSession, d: String, cells: Int, iters: Int): String = {
+    val ivf = Persisted(s, Persisted.Ivf, d)
+    val kind = s"index${cells}x$iters"
+    val onDisk = () => java.nio.file.Files.isDirectory(ivf.dir(kind)) // path-based
+    ivf.ensure(Seq(kind), attach = onDisk) {
+      buildIvfIndex(s, d, ivf.dir(kind).toString, cells, iters)
+    }
+    ivf.dir(kind).toString
+  }
 
   /** ANN against the MATERIALIZED IVF index: the codebook is read back
     * as a table (cells × dim — model-sized), cells are ranked driver-side,

@@ -24,7 +24,7 @@ object StreamOps {
   private val stagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.admitNanos(s, s"$d/events.parquet")
     graft.Tables.withEventTs(tableStream(s, d, "events"))
   }
 
@@ -104,7 +104,7 @@ object StreamOps {
 
   private def eventsStreamPaced(s: SparkSession, d: String, nFiles: Int,
                                 maxFilesPerTrigger: Int): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.admitNanos(s, s"$d/events.parquet")
     val dir = pacedDir(s, s"$d/events.parquet", nFiles)
     val schema = graft.Tables.schemaOf(s, dir)
     val raw = s.readStream.schema(schema)
@@ -446,10 +446,11 @@ object StreamOps {
     work.toFile.deleteOnExit()
     val sigDir = work.resolve("seen_sigs").toString
     val outDir = work.resolve("kept").toString
-    // seed the state table empty with the signature schema
+    // seed the state table empty with the signature schema; every
+    // trigger reads it back with that schema, so no trigger re-infers it
     val sigCols = (0 until Dedup.MinhashPerms).map(i => lit(0L).as(s"m$i"))
-    s.range(0).select(col("id").as("doc_id") +: sigCols: _*)
-      .write.mode("overwrite").parquet(sigDir)
+    val seed = s.range(0).select(col("id").as("doc_id") +: sigCols: _*)
+    seed.write.mode("overwrite").parquet(sigDir)
 
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", partsFor(d, "documents").toString)
@@ -470,7 +471,7 @@ object StreamOps {
           val survivors = Features.signatures(
             f.sig.join(losers, Seq("doc_id"), "left_anti").truncated)
           // cross-batch: banded probe of the persistent seen-signature table
-          val seen = Features.signatures(sb.read.parquet(sigDir))
+          val seen = Features.signatures(sb.read.schema(seed.schema).parquet(sigDir))
           val suppressed = Dedup.agreed(
               Dedup.candidates(survivors, seen), survivors, seen, minAgree)
             .select(col("a").as("doc_id")).distinct()
@@ -509,19 +510,10 @@ object StreamOps {
     */
   private[graft] val CorpusStateBuckets = graft.operators.LshIndex.Buckets
 
-  /** Catalog name of one of the maintainer's bucketed state tables,
-    * namespaced like [[graft.operators.LshIndex.tbl]] (sha-256 of the
-    * canonicalized data dir, salted with the corpus freshness stamp —
-    * a regenerated documents.parquet rolls the state namespace AND the
-    * work-dir key below, forcing a fresh checkpoint + full replay
-    * instead of trusting state accumulated over the old rows).
-    */
-  private[graft] def corpusStamp(d: String): String =
-    graft.DirKeys.contentStamp(
-      java.nio.file.Paths.get(d, "documents.parquet").toString)
-
+  /** One state-table name, for one-off lookups; the maintainer itself
+    * names its tables from one [[graft.Persisted]] handle per call. */
   private[graft] def corpusTbl(kind: String, d: String): String =
-    s"graft_strmcorp_${kind}_${graft.DirKeys.generation(d, "documents.parquet")}"
+    graft.Persisted.CorpusState.name(d, kind)
 
   /** The maintainer's probed state tables and their bucket keys.
     * `bench` is written ONCE (the benchmark decontamination set pre-exists
@@ -546,31 +538,6 @@ object StreamOps {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
       .bucketSpec.map(_.numBuckets).getOrElse(CorpusStateBuckets)
 
-  /** Finish a [[compactCorpusState]] interrupted between its DROP and
-    * RENAME (the [[graft.operators.LshIndex]] recover pattern): the
-    * compacted rows survive whole in the `_compacting` staging table,
-    * so complete the swap instead of losing the accumulated state.
-    */
-  private def recoverCorpusCompacting(s: SparkSession, d: String): Unit =
-    CorpusStateKinds.foreach { case (kind, _) =>
-      val t = corpusTbl(kind, d)
-      val tmp = t + "_compacting"
-      if (!s.catalog.tableExists(t) && s.catalog.tableExists(tmp))
-        renameAndRepair(s, tmp, t)
-    }
-
-  /** RENAME + re-sync partition metadata: unlike the unpartitioned
-    * LshIndex tables, these are PARTITIONED — the catalog records a
-    * location per `batch=` partition, and ALTER TABLE RENAME moves the
-    * directory without rewriting those, leaving every partition pointing
-    * at the vanished staging path (scans then read empty). MSCK re-lists
-    * them from the moved directory.
-    */
-  private def renameAndRepair(s: SparkSession, from: String, to: String): Unit = {
-    s.sql(s"ALTER TABLE `$from` RENAME TO `$to`")
-    s.sql(s"MSCK REPAIR TABLE `$to`")
-  }
-
   /** Compact — and optionally RE-bucket — the maintainer's accumulated
     * state: every committed `batch=<id>` partition folds into the
     * `batch=-1` base partition, one file per bucket. Each micro-batch's
@@ -587,9 +554,7 @@ object StreamOps {
     * exchange-free. Call BETWEEN stream passes (after the checkpoint
     * committed the batches being folded): a committed batch can never
     * replay, so folding its partition into the base is final; the swap
-    * itself is crash-safe (staging table + atomic catalog rename,
-    * recovered by [[recoverCorpusCompacting]] on the next call or the
-    * next warm stream pass).
+    * itself is the crash-safe [[graft.Persisted]] staging swap.
     *
     * `keepFrom` is the MID-REPLAY form (round-8 judge ask): called from
     * inside batch N's foreachBatch closure with `keepFrom = N`, it
@@ -618,41 +583,15 @@ object StreamOps {
                          buckets: Int = PreserveBuckets,
                          keepFrom: Long = Long.MaxValue,
                          kinds: Seq[String] = CorpusStateKinds.map(_._1)): Unit = {
-    recoverCorpusCompacting(s, d)
-    // Pin bucketed reading on for the rewrite: with no join/agg in the
-    // plan, DisableUnnecessaryBucketedScan would downgrade to a plain
-    // size-split scan and the writer would split every task by bucket
-    // (files × tasks out instead of one per bucket — the LshIndex
-    // compact lesson).
-    val AutoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = s.conf.get(AutoKey)
-    s.conf.set(AutoKey, "false")
-    try CorpusStateKinds.filter(k => kinds.contains(k._1)).foreach { case (kind, key) =>
-      val t = corpusTbl(kind, d)
-      if (s.catalog.tableExists(t)) {
-        val tblBuckets = if (buckets > 0) buckets else tableBuckets(s, t)
-        val tmp = t + "_compacting"
-        if (s.catalog.tableExists(tmp)) s.sql(s"DROP TABLE `$tmp`")
-        // a stale staging DIR from a previous JVM (in-memory catalog
-        // forgot the table, warehouse dir survived) would fail the write
-        val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = java.nio.file.Paths.get(wh, tmp)
-        if (java.nio.file.Files.exists(loc)) {
-          val walk = java.nio.file.Files.walk(loc)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        s.table(t)
-          .withColumn("batch",
+    val st = graft.Persisted(s, graft.Persisted.CorpusState, d)
+    CorpusStateKinds.filter(k => kinds.contains(k._1)).foreach { case (kind, key) =>
+      st.rewrite(kind) { t =>
+        val tblBuckets = if (buckets > 0) buckets else tableBuckets(s, st.name(kind))
+        t.withColumn("batch",
             when(col("batch") < lit(keepFrom), lit(-1L)).otherwise(col("batch")))
-          .write.partitionBy("batch")
-          .bucketBy(tblBuckets, key).sortBy(key)
-          .format("parquet").saveAsTable(tmp)
-        s.sql(s"DROP TABLE `$t`")
-        renameAndRepair(s, tmp, t)
+          .write.partitionBy("batch").bucketBy(tblBuckets, key).sortBy(key)
       }
-    } finally s.conf.set(AutoKey, prevAuto)
+    }
   }
 
   /** Payload bytes PER state table, split into the folded base
@@ -666,8 +605,7 @@ object StreamOps {
     */
   private[graft] def corpusStateBytesByKind(s: SparkSession, d: String,
                                             curBatch: Long): Map[String, (Long, Long)] = {
-    val wh = java.nio.file.Paths.get(java.net.URI.create(
-      s.conf.get("spark.sql.warehouse.dir")).getPath)
+    val st = graft.Persisted(s, graft.Persisted.CorpusState, d)
     def bytes(p: java.nio.file.Path): Long = {
       val walk = java.nio.file.Files.walk(p)
       try {
@@ -680,7 +618,7 @@ object StreamOps {
     CorpusStateKinds.map { case (kind, _) =>
       var base = 0L
       var batches = 0L
-      val t = wh.resolve(corpusTbl(kind, d))
+      val t = st.dir(kind)
       if (java.nio.file.Files.isDirectory(t)) {
         val list = java.nio.file.Files.list(t)
         try {
@@ -758,7 +696,9 @@ object StreamOps {
     import graft.operators.{CorpusOps, Dedup}
     import graft.functions.TextFunctions
     import org.apache.spark.sql.expressions.Window
-    val work = corpusWorkDirs.getOrElseUpdate((d, corpusStamp(d)), {
+    val st = graft.Persisted(s, graft.Persisted.CorpusState, d)
+    val stateKinds = CorpusStateKinds.map(_._1)
+    val work = corpusWorkDirs.getOrElseUpdate((d, st.key), {
       val t = java.nio.file.Files.createTempDirectory("graft_stream_corpus_")
       t.toFile.deleteOnExit()
       val w = t.toString
@@ -773,52 +713,41 @@ object StreamOps {
       s.range(0).select(col("id").as("doc_id"))
         .write.parquet(s"$w/contam/batch=-1")
       // PROBED state: partitioned-by-batch + BUCKETED catalog tables
-      // (the LshIndex layout). Created empty here; a fresh work dir
-      // means a fresh checkpoint and a full replay, so any same-named
-      // tables from a previous JVM are dropped (with their stale
-      // warehouse dirs — the in-memory catalog forgets them on exit).
-      graft.WarehouseGC.sweep(s, d) // superseded generations die at build time
-      val sigCols = (0 until Dedup.MinhashPerms).map(i => lit(0L).as(s"m$i"))
-      def seedTable(df: DataFrame, kind: String, key: String): Unit = {
-        val tn = corpusTbl(kind, d)
-        if (s.catalog.tableExists(tn)) s.sql(s"DROP TABLE `$tn`")
-        val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = java.nio.file.Paths.get(wh, tn)
-        if (java.nio.file.Files.exists(loc)) {
-          val walk = java.nio.file.Files.walk(loc)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        df.withColumn("batch", lit(-1L))
-          .write.partitionBy("batch")
-          .bucketBy(CorpusStateBuckets, key).sortBy(key)
-          .format("parquet").saveAsTable(tn)
+      // (the LshIndex layout), created empty. A fresh work dir means a
+      // fresh checkpoint and a full replay, so the state restarts too.
+      st.invalidate(stateKinds)
+      st.ensure(stateKinds, CorpusStateBuckets) {
+        val sigCols = (0 until Dedup.MinhashPerms).map(i => lit(0L).as(s"m$i"))
+        def seedTable(df: DataFrame, kind: String, key: String): Unit =
+          df.withColumn("batch", lit(-1L))
+            .write.partitionBy("batch")
+            .bucketBy(CorpusStateBuckets, key).sortBy(key)
+            .format("parquet").saveAsTable(st.name(kind))
+        seedTable(s.range(0).select(col("id").as("doc_id"),
+          col("id").cast("int").as("band"), col("id").as("bkey")), "bands", "bkey")
+        seedTable(s.range(0).select(col("id").as("doc_id") +: sigCols: _*),
+          "sigs", "doc_id")
+        seedTable(s.range(0).select(col("id").as("doc_id"), col("id").as("h")),
+          "shingles", "doc_id")
+        seedTable(s.range(0).select(col("id").as("doc_id"), col("id").as("sz")),
+          "sizes", "doc_id")
+        seedTable(s.range(0).select(col("id").cast("string").as("fp")),
+          "fps", "fp")
+        // the static benchmark shingle set, written ONCE with its data: a
+        // per-batch `broadcast(bench)` hint OOM'd the driver at 25 M docs
+        // (the benchmark set is corpus-derived here, ~29 M hashes) — the
+        // Pipeline.scala lesson. On this layout the per-batch semi-join
+        // plans zero bench-side exchange, and AQE still broadcasts it at
+        // SFs where it measures small.
+        seedTable(CorpusOps.shingleHashes(
+            graft.Tables.documents(s, d).filter(col("source") === "src0"), 8)
+          .select(col("h")).distinct(), "bench", "h")
       }
-      seedTable(s.range(0).select(col("id").as("doc_id"),
-        col("id").cast("int").as("band"), col("id").as("bkey")), "bands", "bkey")
-      seedTable(s.range(0).select(col("id").as("doc_id") +: sigCols: _*),
-        "sigs", "doc_id")
-      seedTable(s.range(0).select(col("id").as("doc_id"), col("id").as("h")),
-        "shingles", "doc_id")
-      seedTable(s.range(0).select(col("id").as("doc_id"), col("id").as("sz")),
-        "sizes", "doc_id")
-      seedTable(s.range(0).select(col("id").cast("string").as("fp")),
-        "fps", "fp")
-      // the static benchmark shingle set, written ONCE with its data: a
-      // per-batch `broadcast(bench)` hint OOM'd the driver at 25 M docs
-      // (the benchmark set is corpus-derived here, ~29 M hashes) — the
-      // Pipeline.scala lesson. On this layout the per-batch semi-join
-      // plans zero bench-side exchange, and AQE still broadcasts it at
-      // SFs where it measures small.
-      seedTable(CorpusOps.shingleHashes(
-          graft.Tables.documents(s, d).filter(col("source") === "src0"), 8)
-        .select(col("h")).distinct(), "bench", "h")
       w
     })
     // a warm call trusts the tables: finish any compaction swap that
     // crashed between its DROP and RENAME before reading them
-    recoverCorpusCompacting(s, d)
+    st.recover(stateKinds)
     val dir = pacedDir(s, s"$d/documents.parquet", nFiles)
     val schema = graft.Tables.schemaOf(s, dir)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -899,13 +828,13 @@ object StreamOps {
           // with the bucket hash (same murmur3 pmod), so each batch
           // lands ONE file per bucket instead of files × tasks.
           def readTbl(kind: String): DataFrame =
-            sb.table(corpusTbl(kind, d))
+            sb.table(st.name(kind))
               .filter(col("batch") =!= batchId).drop("batch")
           def writeTbl(df: DataFrame, kind: String, key: String): Unit =
             df.repartition(CorpusStateBuckets, col(key))
               .withColumn("batch", lit(batchId))
               .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-              .insertInto(corpusTbl(kind, d))
+              .insertInto(st.name(kind))
           val batch = batch0.truncated
           // -- 1. near-dup pair maintenance (over ALL docs, like q51): the
           // batch's word features pair with themselves and with the

@@ -377,13 +377,13 @@ class RetrievalSpec extends AnyFunSuite {
     kinds.foreach(k => copyTree(
       stash.resolve(Retrieval.tbl(k, d)),
       java.nio.file.Paths.get(wh, Retrieval.tbl(k, d))))
-    // … under an index whose layout metadata says it was written with a
+    // … under an index whose sentinel says it was written with a
     // DIFFERENT bucket count (source constant changed between JVMs): a
     // reattach would declare the wrong count in its DDL and bucket
     // pruning would silently return wrong probe rows.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(wh, Retrieval.tbl("meta", d)),
-      s"buckets=${Retrieval.Buckets * 2}\n".getBytes("UTF-8"))
+    val sentinel = Persisted(spark, Persisted.Inverted, d).sentinel(kinds)
+    java.nio.file.Files.writeString(sentinel, java.nio.file.Files.readString(sentinel)
+      .replace(s"buckets=${Retrieval.Buckets}\n", s"buckets=${Retrieval.Buckets * 2}\n"))
     // reattach must REFUSE → clear-and-rebuild from the corpus: the
     // appended batch is gone (rebuild cost, never wrong rows)
     val probed = probeRows(d)

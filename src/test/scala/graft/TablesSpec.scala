@@ -133,6 +133,28 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("events turns nanosAsLong on only for a TIMESTAMP(NANOS) footer") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getAll.get(key) // explicitly set, not the default
+    spark.conf.unset(key)
+    try {
+      // the sf0.001 testdata stores TIMESTAMP(MICROS): the setting stays unset
+      assert(Tables.events(spark, sf).schema("ts").dataType.typeName === "timestamp_ntz")
+      assert(!spark.conf.getAll.contains(key))
+      val d = tempDir()
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 ts (TIMESTAMP(NANOS,false)); }")
+      val writer = ExampleParquetWriter.builder(new Path(s"$d/events.parquet"))
+        .withType(schema).withConf(new Configuration()).build()
+      try writer.write(new SimpleGroupFactory(schema).newGroup()
+        .append("ts", 1700000000123456789L))
+      finally writer.close()
+      val ts = Tables.events(spark, d).collect().map(_.get(0).toString)
+      assert(spark.conf.getAll.get(key).contains("true"))
+      assert(ts.toSeq === Seq("2023-11-14T22:13:20.123456"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("a partitioned directory reads as stock, partition columns included") {
     import spark.implicits._
     val d = tempDir()
