@@ -52,7 +52,7 @@ object GraftSession {
     // *initial* number high and letting AQE shrink is the scale-safe
     // direction; the reverse (small initial) cannot be fixed at runtime.
     .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", (shufflePartitions * 8).toString))
+      (shufflePartitions * 8).toString)
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     // Runtime SMJ → shuffled-hash-join conversion: when a join side's
     // per-partition map fits this budget, AQE swaps the sort-merge for a
@@ -62,7 +62,7 @@ object GraftSession {
     // joins are untouched (no exchange ⇒ no AQE re-plan ⇒ they keep the
     // sort-free SMJ their sorted layout gives them).
     .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ", (128L * 1024 * 1024).toString))
+      (128L * 1024 * 1024).toString)
     // Runtime Bloom-filter injection (posture, not a measured win here):
     // a join side with a selective FILTER can plant a bloom on the join
     // key into the other side's scan so the fact shuffle carries only
@@ -72,8 +72,7 @@ object GraftSession {
     // behind a JOIN rather than a predicate (q04's ASIA fifth — measured
     // neutral, 23.5 s either way at the 1000× point), so this helps
     // filter-shaped reductions only.
-    .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_BLOOM", "true"))
+    .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
       (2L * 1024 * 1024 * 1024).toString)
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
@@ -106,14 +105,9 @@ object GraftSession {
     // round 9 as the full 138-query suite inflating per-micro-batch
     // streaming queries 5-12× (q36 2.4 s isolated vs 28.8 s in-suite)
     // while the same queries read in-band in any ≤12-query session.
-    // Static conf: must be set before the session exists.
-    // The env override is a raise-only dial: PlanSpec pins that any
-    // session was BUILT with >= 4000, so a value below the floor would
-    // fail the suite in a way that reads as a code regression rather
-    // than a config conflict — clamp instead of trusting the caller.
-    .config("spark.sql.codegen.cache.maxEntries",
-      math.max(4000,
-        sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").map(_.toInt).getOrElse(4000)).toString)
+    // Static conf: must be set before the session exists (PlanSpec pins
+    // that any session was BUILT with >= 4000).
+    .config("spark.sql.codegen.cache.maxEntries", "4000")
     .config("spark.ui.enabled", "false")
   }
 
@@ -126,4 +120,9 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The mains' session: `local[SPARK_GRAFT_CPUS]`, 4 cores when unset.
+    * The one place the core count is read. */
+  def fromEnv(): SparkSession =
+    local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
 }

@@ -41,7 +41,7 @@ object Lineage {
     def truncated: DataFrame = Lineage.truncate(df)
   }
 
-  /** Storage for the local (executor-resident) mode. Default
+  /** Storage for the local (executor-resident) mode,
     * MEMORY_AND_DISK_SER: serialized blocks are 3-5× smaller than the
     * deserialized default, and the difference is the whole game when a
     * corpus-sized intermediate (signatures, shingles) is truncated on a
@@ -49,11 +49,9 @@ object Lineage {
     * tasks — round 5 measured the deserialized form starving shuffle
     * writers at the 5 M-doc point (`UNABLE_TO_ACQUIRE … got 0` inside
     * ShuffleExternalSorter.spill). The cost is one ser/deser per
-    * consumer read — linear CPU, no cliff. `spark.graft.truncateStorage`
-    * overrides (any StorageLevel name, e.g. MEMORY_AND_DISK for the old
-    * behavior).
+    * consumer read — linear CPU, no cliff.
     */
-  val StorageKey = "spark.graft.truncateStorage"
+  private val LocalLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   /** As [[truncate]], but with an explicit local-mode storage level —
     * for CORPUS-sized intermediates that are written once and read a
@@ -74,14 +72,13 @@ object Lineage {
     * ExistingRDD` stubs. Scoped to the calling thread and the threads it
     * starts, never a session setting: iterative operators run outside it
     * would re-execute their whole lineage per round. Only
-    * [[PlanFormatted]] enters it.
+    * [[PlanDump]] enters it.
     */
   private val noTruncate = new scala.util.DynamicVariable[Boolean](false)
 
   def untruncated[A](body: => A): A = noTruncate.withValue(true)(body)
 
-  def truncate(df: DataFrame): DataFrame =
-    truncateTo(df, localLevel(df.sparkSession))
+  def truncate(df: DataFrame): DataFrame = truncateTo(df, LocalLevel)
 
   /** RDD form of [[truncate]], for iterative loops written on RDDs: marks
     * `rdd` for the same reliable or local checkpoint, taken by the first
@@ -90,14 +87,11 @@ object Lineage {
     */
   def truncate[T](s: SparkSession, rdd: RDD[T]): RDD[T] = {
     if (!noTruncate.value) {
-      rdd.persist(localLevel(s))
+      rdd.persist(LocalLevel)
       if (reliable(s)) rdd.checkpoint() else rdd.localCheckpoint()
     }
     rdd
   }
-
-  private def localLevel(s: SparkSession): StorageLevel =
-    StorageLevel.fromString(s.conf.get(StorageKey, "MEMORY_AND_DISK_SER"))
 
   /** Whether `spark.graft.checkpointDir` is set; if so, the context's
     * checkpoint dir points into it. */

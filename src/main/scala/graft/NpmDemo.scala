@@ -18,7 +18,7 @@ object NpmDemo {
     val path = args.headOption
       .getOrElse("src/test/resources/packages.txt.gz")
     val limit = args.lift(1).map(_.toInt).getOrElse(25)
-    val spark = GraftSession.local(4)
+    val spark = GraftSession.fromEnv()
 
     val names = GzipLines.read(spark, path).limit(limit)
     val parsed = Registry.enrichWithClient(names, new SyntheticRegistry)

@@ -110,7 +110,7 @@ object Persisted {
     /** Recover any interrupted swap, then true when `kinds` hold a
       * complete generation written with `buckets`: the sentinel matches
       * and every kind is registered, or `attach` registers them. */
-    def current(kinds: Seq[String], buckets: Int = 0,
+    private def current(kinds: Seq[String], buckets: Int = 0,
                 attach: () => Boolean = () => false): Boolean = fam.synchronized {
       recover(kinds)
       val p = sentinel(kinds)

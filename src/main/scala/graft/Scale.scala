@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up of a driver testdata dir: replicate every fact
   * table `factor`× with per-replica key offsets, preserving the driver's
-  * single-file-parquet layout. Produces a measured scale point above the
+  * single-file-parquet layout up to 1000× (a parquet directory per table
+  * above it). Produces a measured scale point above the
   * largest shipped SF (the 100 TB design arguments need at least one
   * measured multiple).
   *
@@ -41,8 +42,7 @@ object Scale {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Scale <srcDir> <outDir> <factor> [tables]")
     val Array(src, out, factorStr) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = GraftSession.local(cpus.toInt)
+    val s = GraftSession.fromEnv()
     // Optional 4th arg: comma-separated table subset — lets a factor that
     // only fits partially on disk (e.g. 10000× orders without the 110 GB
     // lineitem) still produce a measurable point. Unknown names fail fast:
@@ -61,6 +61,15 @@ object Scale {
   def scaleUp(s: SparkSession, src: String, out: String, factor: Int,
               tables: Option[Set[String]] = None): Unit = {
     def want(t: String): Boolean = tables.forall(_.contains(t))
+    // One parquet FILE per table (the testdata layout) up to
+    // 1000×, a parquet DIRECTORY above it — Tables reads either. The
+    // single file forces the whole replication through ONE task
+    // (coalesce(1)), which serializes the per-char document transform
+    // for hours at 10000×; the directory keeps generation parallel (and
+    // is what any real corpus looks like anyway).
+    def write(df: DataFrame, file: String): Unit =
+      if (factor > 1000) df.write.mode("overwrite").parquet(file)
+      else writeSingle(df, file)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     // A subset dir is otherwise indistinguishable from a full one: leave
     // a marker naming what it contains so consumers can tell. A later
@@ -77,10 +86,10 @@ object Scale {
     // smaller-by-bytes range side, leaving the 1-split source scan as the
     // stream — ONE task then generates (and parquet-encodes) the whole
     // factor× output no matter what the writer asks for (found twice this
-    // round as 10 GB single-file outputs with SPARK_GRAFT_SCALE_MULTI=1).
+    // round as one 10 GB part file in directory mode).
     // Repartitioning the replicas and broadcasting the source table pins
     // the roles: `factor`-way parallel generation, one output file per
-    // task in multi-file mode. (Source tables are bounded by the SOURCE
+    // task in directory mode. (Source tables are bounded by the SOURCE
     // scale factor — broadcastable by construction.)
     val reps = s.range(factor.toLong).select(col("id").cast("int").as("rep"))
       .repartition(math.min(factor, 256))
@@ -93,23 +102,23 @@ object Scale {
     if (want("nation")) copySingle(s, src, out, "nation")
     if (want("region")) copySingle(s, src, out, "region")
 
-    if (want("customer")) writeSingle(replicated("customer")
+    if (want("customer")) write(replicated("customer")
       .withColumn("c_custkey", off("c_custkey")).drop("rep"), s"$out/customer.parquet")
-    if (want("supplier")) writeSingle(replicated("supplier")
+    if (want("supplier")) write(replicated("supplier")
       .withColumn("s_suppkey", off("s_suppkey")).drop("rep"), s"$out/supplier.parquet")
-    if (want("part")) writeSingle(replicated("part")
+    if (want("part")) write(replicated("part")
       .withColumn("p_partkey", off("p_partkey")).drop("rep"), s"$out/part.parquet")
-    if (want("orders")) writeSingle(replicated("orders")
+    if (want("orders")) write(replicated("orders")
       .withColumn("o_orderkey", off("o_orderkey"))
       .withColumn("o_custkey", off("o_custkey")).drop("rep"), s"$out/orders.parquet")
-    if (want("lineitem")) writeSingle(replicated("lineitem")
+    if (want("lineitem")) write(replicated("lineitem")
       .withColumn("l_orderkey", off("l_orderkey"))
       .withColumn("l_partkey", off("l_partkey"))
       .withColumn("l_suppkey", off("l_suppkey")).drop("rep"), s"$out/lineitem.parquet")
 
     // events: a TIMESTAMP(NANOS) ts arrives (and leaves) as raw ns long
     Tables.admitNanos(s, s"$src/events.parquet")
-    if (want("events")) writeSingle(replicated("events")
+    if (want("events")) write(replicated("events")
       .withColumn("event_id", off("event_id"))
       .withColumn("user_id", off("user_id")).drop("rep"), s"$out/events.parquet")
 
@@ -136,7 +145,7 @@ object Scale {
       transform(split(col("text"), ""),
         c => when(c >= "a" && c <= "z",
           element_at(col("perm_arr"), ascii(c) - lit(96))).otherwise(c)), "")
-    if (want("documents")) writeSingle(replicated("documents")
+    if (want("documents")) write(replicated("documents")
       .withColumn("doc_id", off("doc_id"))
       .join(permDf, Seq("rep"), "left")
       .withColumn("text", when(col("rep") === 0, col("text")).otherwise(mapped))
@@ -149,7 +158,7 @@ object Scale {
     val masked = when(col("rep") === 0, col("embedding")).otherwise(
       transform(col("embedding"),
         (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x).otherwise(-x)))
-    if (want("embeddings")) writeSingle(replicated("embeddings")
+    if (want("embeddings")) write(replicated("embeddings")
       .withColumn("vec_id", off("vec_id"))
       .withColumn("embedding", masked.cast("array<float>"))
       .withColumn("label", (col("label") + col("rep") * 1000).cast("int"))
@@ -164,19 +173,8 @@ object Scale {
 
   /** Write as ONE parquet FILE (the driver testdata layout Tables
     * expects): stage a coalesced dir, move the part file, drop the dir.
-    *
-    * `SPARK_GRAFT_SCALE_MULTI=1` writes a parquet DIRECTORY under the
-    * same name instead — Tables reads either. The single-file layout
-    * forces the whole replication through ONE task (coalesce(1)), which
-    * is fine up to ~1000× but serializes the per-char document transform
-    * for hours at 10000×; the multi-file form keeps generation parallel
-    * (and is what any real corpus looks like anyway).
     */
   private def writeSingle(df: DataFrame, outFile: String): Unit = {
-    if (sys.env.get("SPARK_GRAFT_SCALE_MULTI").exists(_.nonEmpty)) {
-      df.write.mode("overwrite").parquet(outFile)
-      return
-    }
     // stage FIRST: only once the replacement data is fully written may a
     // pre-existing output (e.g. a prior multi-file run's DIRECTORY under
     // this name, which Files.move cannot replace) be deleted — a failure

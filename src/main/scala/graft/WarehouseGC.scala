@@ -243,8 +243,7 @@ object Gc {
       if (given.nonEmpty) given.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val s = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val s = GraftSession.fromEnv()
     dirs.foreach { d =>
       val gone = WarehouseGC.sweep(s, d)
       println(s"gc: $d — removed ${gone.size} superseded generation dir(s)" +

@@ -969,8 +969,8 @@ object CorpusOps {
     * side, so AQE broadcasts its gram set from measured size and pass
     * A is a map-side join: the pool is scanned, never exchanged. The
     * no-SortMergeJoin final plan is spec-pinned on this registry path
-    * (CorpusSelectionSpec); ContaminationScale measured the regime
-    * 9.6× linear at 50 M docs vs the hinted sort-merge's 12.7×.
+    * (CorpusSelectionSpec); SCALE.md records the regime 9.6× linear
+    * at 50 M docs vs the hinted sort-merge's 12.7×.
     * Output is bit-identical to [[contaminationSpans]] — it shares
     * q118's oracle.
     */
@@ -989,8 +989,8 @@ object CorpusOps {
     * set carries no join hint: AQE broadcasts it from measured size and
     * pass A becomes a map-side semi-join — the pool is SCANNED, never
     * shuffled, so cost tracks the corpus scan alone (the regime the
-    * q118 50 M super-linear analysis predicts; ContaminationScale
-    * measures it). Set it true when the bench side scales with the
+    * q118 50 M super-linear analysis predicts; SCALE.md records the
+    * measurement). Set it true when the bench side scales with the
     * corpus (the registry query's synthetic src0 slice): a grows-with-
     * corpus side must sort-merge — at 5 M docs AQE's SMJ→SHJ conversion
     * on the unhinted form built 32 concurrent unspillable string-keyed

@@ -297,19 +297,6 @@ object Retrieval {
     needed
   }
 
-  /** Reattach a COMPLETE surviving index or fail — the reattach-pricing
-    * entry point ([[graft.RetrievalScale]] nAppends=-1): falling
-    * through to a silent full rebuild would record a plausible-looking
-    * build time AS a reattach number (round-8 advice). Runs the same
-    * crash recovery [[buildIndex]] does first, so an interrupted
-    * compaction does not masquerade as a missing index. */
-  def reattachOrFail(s: SparkSession, d: String): Unit = {
-    val ix = Persisted(s, Persisted.Inverted, d)
-    require(ix.current(IndexKinds, Buckets, () => reattach(ix)),
-      s"no complete index generation to reattach for $d — " +
-        "run a build first (RetrievalScale <dir> 0)")
-  }
-
   /** Hybrid retrieval via Reciprocal Rank Fusion (Cormack, Clarke &
     * Buettcher 2009): fuse the lexical BM25 ranking with a dense
     * cosine ranking against a query embedding — the standard two-tower
@@ -357,7 +344,7 @@ object Retrieval {
     * index covers exactly the current corpus before serving, rebuilding
     * on mismatch ([[ensureCorpusExact]]; memoized per JVM, so steady
     * probes stay index-only). The maintained-lifecycle callers
-    * (RetrievalScale, the append specs) pass false: for them an index
+    * (the append specs) pass false: for them an index
     * holding corpus ∪ appended batches is the POINT, and the probe
     * answers over whatever the index currently holds. */
   def bm25Indexed(s: SparkSession, d: String, terms: Seq[String] = DefaultTerms,

@@ -59,10 +59,12 @@ object StreamOps {
     s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
   }
 
-  // Multi-file staging for trigger-pacing runs: one (source, nFiles)
-  // re-split per JVM. A real deployment's arrival dir is already many
-  // files; locally we split the single test file so `maxFilesPerTrigger`
-  // actually paces micro-batches instead of draining in one.
+  // Multi-file staging for trigger-pacing runs: one (canonical source,
+  // nFiles) re-split per JVM, so every spelling of a path streams the
+  // same files (a checkpoint tracks the files it has seen by path). A
+  // real deployment's arrival dir is already many files; locally we
+  // split the single test file so `maxFilesPerTrigger` actually paces
+  // micro-batches instead of draining in one.
   private val stagedMulti = scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
   /** Re-stage a single-file source as `nFiles` event-time-ordered chunk
@@ -76,7 +78,7 @@ object StreamOps {
     * monotone, with cross-batch disorder confined to chunk boundaries.
     */
   private def pacedDir(s: SparkSession, path: String, nFiles: Int): String =
-    stagedMulti.getOrElseUpdate((path, nFiles), {
+    stagedMulti.getOrElseUpdate((graft.DirKeys.canonical(path), nFiles), {
       val df = s.read.parquet(path)
       val orderCol = if (df.columns.contains("ts")) "ts" else df.columns.head
       val t = java.nio.file.Files.createTempDirectory("graft_stream_paced_")
@@ -118,7 +120,7 @@ object StreamOps {
     * the correctness half of the trigger-size dial, asserted against the
     * q30 oracle; the cost half (state-store commits are per-batch, so
     * smaller triggers buy lower latency at fixed per-batch overhead) is
-    * measured in SCALE.md via [[graft.StreamPace]].
+    * measured in SCALE.md.
     */
   def windowedCountsPaced(s: SparkSession, d: String, nFiles: Int = 8,
                           maxFilesPerTrigger: Int = 1): DataFrame = {
@@ -150,28 +152,24 @@ object StreamOps {
   }
 
   private def partsFor(d: String, table: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      // ~6 MB of snappy parquet per partition: on-disk bytes understate
-      // in-memory row volume ~8-10×, so the earlier 24 MB/partition
-      // target still landed every test corpus at the 8-partition clamp
-      // (87 MB at the 100× point → 8) and the dial never engaged.
-      // Floor lowered 8 → 4 after the round-4 drift A/B (REPEAT=3,
-      // sf0.1): state-store open/commit is per-partition-per-batch, and
-      // 4 partitions measured q36 2.60 → 2.08 s, q38 3.68 → 3.14 s
-      // steady-state — recovering the round-2→3 regression. Scale dirs
-      // are unaffected (the byte dial dominates past ~24 MB).
-      math.min(32, math.max(4, (bytesFor(d, table) / (6L << 20)).toInt))
-    }
+    // ~6 MB of snappy parquet per partition: on-disk bytes understate
+    // in-memory row volume ~8-10×, so the earlier 24 MB/partition
+    // target still landed every test corpus at the 8-partition clamp
+    // (87 MB at the 100× point → 8) and the rule never engaged.
+    // Floor lowered 8 → 4 after the round-4 drift A/B (REPEAT=3,
+    // sf0.1): state-store open/commit is per-partition-per-batch, and
+    // 4 partitions measured q36 2.60 → 2.08 s, q38 3.68 → 3.14 s
+    // steady-state — recovering the round-2→3 regression. Scale dirs
+    // are unaffected (the byte rule dominates past ~24 MB).
+    math.min(32, math.max(4, (bytesFor(d, table) / (6L << 20)).toInt))
 
   /** Per-trigger admission bound: a single source file larger than this
     * is re-staged into `ceil(bytes / paceBytes)` time-ordered chunks and
-    * drained one chunk per micro-batch. System property first so specs
-    * can dial it; env for scale runs.
+    * drained one chunk per micro-batch. The `graft.stream.paceBytes`
+    * system property lets specs lower it.
     */
   private def paceBytes: Long =
-    sys.props.get("graft.stream.paceBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PACE_BYTES"))
-      .map(_.toLong).getOrElse(32L << 20)
+    sys.props.get("graft.stream.paceBytes").map(_.toLong).getOrElse(32L << 20)
 
   /** State-store choice for one streaming run. The default
     * HDFSBackedStateStoreProvider keeps every state version ON HEAP —
@@ -181,12 +179,11 @@ object StreamOps {
     * threshold we switch the run to RocksDB, which holds state off-heap
     * with an LRU block cache; at small SFs the in-memory provider stays
     * (RocksDB's per-batch open/commit overhead loses there — A/B'd in
-    * round 1). `graft.stream.stateStore` / SPARK_GRAFT_STATE_STORE =
+    * round 1). The `graft.stream.stateStore` system property =
     * `rocksdb` | `memory` forces either.
     */
   private def useRocksDb(d: String, table: String): Boolean =
-    sys.props.get("graft.stream.stateStore")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_STORE")) match {
+    sys.props.get("graft.stream.stateStore") match {
       case Some("rocksdb") => true
       case Some(_)         => false
       case None            => bytesFor(d, table) > paceBytes
@@ -490,11 +487,13 @@ object StreamOps {
   }
 
   // persistent state dirs for the streaming training-corpus maintainer,
-  // one per (sfDir, corpus stamp): a regenerated documents.parquet gets
-  // a FRESH work dir + checkpoint in the same JVM, matching the rolled
-  // state-table namespace (same lifecycle rationale as mergeWorkDirs)
+  // one per state generation key (canonical sfDir digest + corpus
+  // stamp): a regenerated documents.parquet gets a FRESH work dir +
+  // checkpoint in the same JVM, matching the rolled state-table
+  // namespace (same lifecycle rationale as mergeWorkDirs), and every
+  // spelling of one dir shares the one checkpoint its state belongs to
   private val corpusWorkDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Bucket count of the maintainer's state tables — matches
     * [[graft.operators.LshIndex.Buckets]]; at 100 TB a deployment sizes
@@ -698,7 +697,7 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val st = graft.Persisted(s, graft.Persisted.CorpusState, d)
     val stateKinds = CorpusStateKinds.map(_._1)
-    val work = corpusWorkDirs.getOrElseUpdate((d, st.key), {
+    val work = corpusWorkDirs.getOrElseUpdate(st.key, {
       val t = java.nio.file.Files.createTempDirectory("graft_stream_corpus_")
       t.toFile.deleteOnExit()
       val w = t.toString

@@ -3,7 +3,10 @@ package graft
 import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Trigger pacing and the state-store dial (the 100×-point fixes).
@@ -49,6 +52,31 @@ class StreamPacingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val warm = StreamOps.trainingCorpusStream(spark, sf)
       .collect().map(_.toSeq)
     assert(warm === batchOut)
+    // another spelling of the same dir shares the state AND its
+    // checkpoint: no micro-batch admits input rows (a fresh checkpoint
+    // would empty the shared state and replay the whole corpus)
+    val fed = new java.util.concurrent.atomic.AtomicLong
+    val started, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        fed.addAndGet(e.progress.numInputRows)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val respelled = StreamOps.trainingCorpusStream(spark, sf + "/.")
+        .collect().map(_.toSeq)
+      // events of one query arrive in order: once it has terminated,
+      // every progress event it posted has been seen
+      eventually(timeout(Span(60, Seconds))) {
+        assert(!started.isEmpty && ended.containsAll(started))
+      }
+      assert(fed.get() === 0L)
+      assert(respelled === batchOut)
+    } finally spark.streams.removeListener(listener)
   }
 
   test("maintainer's cross-batch probe plans ZERO exchange on the accumulated-state side") {

@@ -217,7 +217,6 @@ class WarehouseGCSpec extends AnyFunSuite {
       "graft_ann_" -> "temp dir (Similarity bucketed-ANN staging)",
       "graft_cdc_" -> "temp dir (stream-merge checkpoint/work)",
       "graft_neardup_" -> "temp dir (q38 suppression work dir)",
-      "graft_retrscale_" -> "temp dir (RetrievalScale scratch corpus)",
       "graft_stream_" -> "temp dirs (paced-replay staging, corpus work dir)",
       // session-scoped temp views — die with the session, no disk
       "graft_cust_" -> "temp view (q27 EXISTS subquery)",
@@ -258,6 +257,14 @@ class WarehouseGCSpec extends AnyFunSuite {
       assert(found.getOrElse(f, Set.empty).exists(_ != "WarehouseGC.scala"),
         s"GC family $f is registered but never minted in src/main — " +
           "remove it or wire its build path")
+    }
+    // and no stale review: every reviewed prefix is still minted in
+    // src/main, so a leftover entry cannot hide a future persisted
+    // family of the same name
+    nonPersisted.keySet.foreach { pre =>
+      assert(found.contains(pre),
+        s"reviewed non-persisted prefix $pre no longer appears in src/main " +
+          "— remove it from the reviewed list")
     }
   }
 }
