@@ -111,6 +111,19 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
   }
 
+  /** Run `body` with `settings` on session `s`, then restore each key's
+    * prior value, or unset a key that was not set before. */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll // only keys set on the session, no defaults
+    val prior = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 4): SparkSession = {
     val s = configure(

@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** The lifecycle every persisted warehouse layout shares: the inverted
   * index (`Retrieval`), the LSH index (`LshIndex`), the dedup feature
-  * index (`DedupIndex`), the bucketed CDC bases (`Cdc`), the IVF index
-  * and codebooks (`Similarity`) and the streaming corpus state
-  * (`StreamOps`). A family keeps only its own policy (what it writes,
-  * reattach DDL, append markers, batch partitions); this module owns
+  * index (`DedupIndex`), the bucketed CDC bases (`Cdc`), the IVF index,
+  * its codebooks and the LSH bucket index (`Similarity`, all kinds of
+  * the IVF family) and the streaming corpus state (`StreamOps`). A
+  * family keeps only its own policy (what it writes, reattach DDL,
+  * append markers, batch partitions); this module owns
   * the rest, so every family gets the same guarantees:
   *
   *  - '''Naming.''' A table or dir is `<prefix><kind>_<pathdig>_<stampdig>`
@@ -141,11 +142,10 @@ object Persisted {
       fam.synchronized {
         recover(Seq(kind))
         if (registered(kind)) {
-          val prev = s.conf.get(AutoBucketedScan)
-          s.conf.set(AutoBucketedScan, "false")
-          try write(table(kind)).format("parquet").mode("overwrite")
-            .saveAsTable(name(kind) + Staging)
-          finally s.conf.set(AutoBucketedScan, prev)
+          GraftSession.withConf(s, AutoBucketedScan -> "false") {
+            write(table(kind)).format("parquet").mode("overwrite")
+              .saveAsTable(name(kind) + Staging)
+          }
           Files.deleteIfExists(dir(kind).resolve("_SUCCESS"))
           drop(name(kind))
           rename(name(kind) + Staging, name(kind))

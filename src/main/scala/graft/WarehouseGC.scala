@@ -125,8 +125,8 @@ object WarehouseGC {
   /** Arrange [[purgeScratch]] for scratch dir `d` at JVM exit. BOTH
     * keys are resolved NOW: the warehouse path because the session may
     * be stopped by the time the hook runs, and the scratch dir's path
-    * DIGEST because the dir itself may already be deleted (deleteOnExit
-    * hook ordering is unspecified) — canonicalizing a vanished path
+    * DIGEST because the dir itself may already be deleted (JVM exit
+    * hooks run in no set order) — canonicalizing a vanished path
     * can diverge from the form the artifact names were minted under
     * (round-8 advice). */
   def registerScratchPurge(s: SparkSession, d: String): Unit = {

@@ -210,12 +210,6 @@ object Similarity {
     scoreProbes(e, qRow.getSeq[Float](0), qRow.getInt(1), queryId, k, probeRadius)
   }
 
-  /** One materialized bucket index per (input dir) per JVM — the local
-    * analog of the bucketed index table a cluster deployment would
-    * maintain next to the corpus.
-    */
-  private val indexDirs = scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** Write the embeddings as a parquet table PARTITIONED BY the LSH
     * bucket. Directory-partitioning (not `bucketBy`) is deliberate: the
     * probe set is a partition-pruning predicate, so a radius-1 query
@@ -230,33 +224,27 @@ object Similarity {
       .write.mode("overwrite").partitionBy("bucket").parquet(out)
   }
 
-  private def bucketedIndexPath(s: SparkSession, d: String): String =
-    indexDirs.getOrElseUpdate((d, embStamp(d)), {
-      val t = java.nio.file.Files.createTempDirectory("graft_ann_index_")
-      t.toFile.deleteOnExit()
-      buildBucketedIndex(s, d, t.toString)
-      t.toString
-    })
-
   /** ANN against the MATERIALIZED bucket index: the probe set becomes a
     * partition filter on the bucketed table, so non-probe partitions are
     * pruned at file-listing time and a radius-1 query reads ~9/256 of
     * the corpus (assert via PartitionFilters in the scan node). Results
-    * are identical to [[knnLsh]] at the same radius.
+    * are identical to [[knnLsh]] at the same radius. The index is the
+    * `lsh8` kind of the persisted IVF family (see [[indexDir]]).
     */
   def knnLshIndexed(s: SparkSession, d: String, queryId: Long = 0L, k: Int = 10,
                     probeRadius: Int = 1): DataFrame = {
     GraftFunctions.register(s)
-    val idx = Tables.parquet(s, bucketedIndexPath(s, d))
+    val idx = Tables.parquet(s,
+      indexDir(s, d, s"lsh$Hyperplanes")(buildBucketedIndex(s, d, _)))
     // query-vector lookup: one row by vec_id (pushed-down point filter)
     val qRow = idx.filter(col("vec_id") === queryId)
       .select("embedding", "bucket").head()
     scoreProbes(idx, qRow.getSeq[Float](0), qRow.getInt(1), queryId, k, probeRadius)
   }
 
-  /** One trained codebook per (dir, cells, iters) per JVM — like
-    * [[indexDirs]], the local analog of the offline-trained IVF codebook
-    * a deployment stores next to its vector index.
+  /** One trained codebook per (embeddings generation, cells, iters)
+    * per JVM — the local analog of the offline-trained IVF codebook a
+    * deployment stores next to its vector index.
     */
   private val codebooks = scala.collection.concurrent.TrieMap
     .empty[(String, Int, Int), Array[Array[Double]]]
@@ -301,14 +289,6 @@ object Similarity {
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
   }
-
-  /** Size+mtime stamp of the embeddings file — the freshness key of the
-    * in-flight bucket index above: a regenerated testdata dir must roll
-    * it, or a live JVM keeps serving an index over the old vectors.
-    */
-  private def embStamp(d: String): String =
-    graft.DirKeys.contentStamp(
-      java.nio.file.Paths.get(d, "embeddings.parquet").toString)
 
   /** Trained codebook for (dir, cells, iters) — the offline-training
     * artifact every IVF/semantic consumer shares. Resolution order:
@@ -503,19 +483,20 @@ object Similarity {
     writeCodebook(s, codebook, s"$out/codebook")
   }
 
-  /** Resolve (building if needed) the persisted index at its stable
+  /** Resolve (building if needed) a persisted index at its stable
     * warehouse location, reused across JVMs like a deployment's index
-    * next to the corpus: a [[graft.Persisted]] kind whose dir holds the
-    * `vectors` and `codebook` artifacts.
+    * next to the corpus: a path-based [[graft.Persisted]] kind of the
+    * IVF family, keyed on the embeddings generation. `build` writes the
+    * index into the dir it is given.
     */
-  private def ivfIndexPath(s: SparkSession, d: String, cells: Int, iters: Int): String = {
+  private def indexDir(s: SparkSession, d: String, kind: String)(
+      build: String => Unit): String = {
     val ivf = Persisted(s, Persisted.Ivf, d)
-    val kind = s"index${cells}x$iters"
-    val onDisk = () => java.nio.file.Files.isDirectory(ivf.dir(kind)) // path-based
-    ivf.ensure(Seq(kind), attach = onDisk) {
-      buildIvfIndex(s, d, ivf.dir(kind).toString, cells, iters)
+    val out = ivf.dir(kind).toString
+    ivf.ensure(Seq(kind), attach = () => java.nio.file.Files.isDirectory(ivf.dir(kind))) {
+      build(out)
     }
-    ivf.dir(kind).toString
+    out
   }
 
   /** ANN against the MATERIALIZED IVF index: the codebook is read back
@@ -528,7 +509,7 @@ object Similarity {
   def knnIvfIndexed(s: SparkSession, d: String, queryId: Long = 0L, k: Int = 10,
                     nprobe: Int = 2, cells: Int = 8, iters: Int = 3): DataFrame = {
     GraftFunctions.register(s)
-    val path = ivfIndexPath(s, d, cells, iters)
+    val path = indexDir(s, d, s"index${cells}x$iters")(buildIvfIndex(s, d, _, cells, iters))
     val codebook = Tables.parquet(s, s"$path/codebook")
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](1).toArray)

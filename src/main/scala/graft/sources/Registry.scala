@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Package-registry enrichment — the reference's per-element HTTP GET to
@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * Two paths:
   *  1. `enrichWithClient`: a [[RegistryClient]] per partition
   *     (connection-per-partition, not per-row). This models the online
-  *     fetch; the container has zero egress, so the only shipped client
-  *     is the deterministic [[LocalRegistry]] fake — the HTTP client is
-  *     intentionally not implemented here.
+  *     fetch. [[HttpRegistry]] is the live client; [[SyntheticRegistry]]
+  *     and [[LocalRegistry]] are deterministic zero-egress stand-ins.
+  *     The caller constructs the client it wants.
   *  2. `parseMetadata`: given a snapshot table of raw registry JSON
   *     (name, body), parse it declaratively with `from_json`. This is the
   *     100 TB path: registries are mirrored as bulk snapshots and joined,
@@ -101,20 +101,6 @@ final class SyntheticRegistry extends RegistryClient {
 }
 
 object Registry {
-
-  /** Config-gated client selection: `graft.registry.mode` = `synthetic`
-    * (default — deterministic, zero egress, what every test and this
-    * container use) or `http` (the live registry;
-    * `graft.registry.url` overrides the endpoint, e.g. an internal
-    * mirror). Keeps the online path one config flip away without making
-    * any test depend on the network.
-    */
-  def clientFromConf(spark: SparkSession): RegistryClient =
-    spark.conf.get("graft.registry.mode", "synthetic") match {
-      case "http" => new HttpRegistry(
-        spark.conf.get("graft.registry.url", "https://registry.npmjs.org"))
-      case _ => new SyntheticRegistry
-    }
 
   /** Schema of a (trimmed) npm registry document: versions →
     * {name, dependencies, devDependencies}. (Reference parse:

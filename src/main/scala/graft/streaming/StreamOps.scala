@@ -18,19 +18,16 @@ import graft.Lineage.TruncateOps
   */
 object StreamOps {
 
-  // One staged copy per source file for the lifetime of the JVM — q36
-  // builds two streams over the same input and the bench runs 9 streaming
-  // queries; re-copying per call cost a file copy + dir churn each time.
-  private val stagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     graft.Tables.admitNanos(s, s"$d/events.parquet")
     graft.Tables.withEventTs(tableStream(s, d, "events"))
   }
 
   /** File-stream over a staged copy of `<d>/<table>.parquet`. The
-    * file-stream source requires a directory; stage the (read-only)
-    * input file into a temp dir once per JVM. On a cluster the source
+    * file-stream source requires a directory, so the (read-only) input
+    * file is copied into a [[graft.Scratch]] dir once per file version
+    * per JVM: q36 builds two streams over one input, and a file
+    * regenerated in place gets a fresh copy. On a cluster the source
     * would already be a directory of arriving files.
     *
     * A single file larger than [[paceBytes]] is re-staged as
@@ -47,25 +44,13 @@ object StreamOps {
     val dir =
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path))) path
       else if (bytesFor(d, table) > paceBytes)
-        pacedDir(s, path, math.ceil(bytesFor(d, table).toDouble / paceBytes).toInt)
-      else stagedDirs.getOrElseUpdate(path, {
-        val t = java.nio.file.Files.createTempDirectory("graft_stream_")
-        t.toFile.deleteOnExit()
-        java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-          t.resolve(s"$table.parquet"))
-        t.toString
-      })
+        pacedDir(s, d, table, math.ceil(bytesFor(d, table).toDouble / paceBytes).toInt)
+      else graft.Scratch.dir("stage", d, s"$table.parquet") { t =>
+        java.nio.file.Files.copy(java.nio.file.Paths.get(path), t.resolve(s"$table.parquet"))
+      }.toString
     val schema = graft.Tables.schemaOf(s, path)
     s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
   }
-
-  // Multi-file staging for trigger-pacing runs: one (canonical source,
-  // nFiles) re-split per JVM, so every spelling of a path streams the
-  // same files (a checkpoint tracks the files it has seen by path). A
-  // real deployment's arrival dir is already many files; locally we
-  // split the single test file so `maxFilesPerTrigger` actually paces
-  // micro-batches instead of draining in one.
-  private val stagedMulti = scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
   /** Re-stage a single-file source as `nFiles` event-time-ordered chunk
     * files with ascending modification times: range-partition on the
@@ -76,13 +61,16 @@ object StreamOps {
     * over time, each covering a bounded span — which is what keeps
     * (a) per-trigger executor volume bounded and (b) watermark advance
     * monotone, with cross-batch disorder confined to chunk boundaries.
+    *
+    * One [[graft.Scratch]] re-split per (file version, nFiles) per JVM:
+    * every spelling of a dir streams the same files (a checkpoint tracks
+    * the files it has seen by path), and a file regenerated in place is
+    * re-split. A real deployment's arrival dir is already many files.
     */
-  private def pacedDir(s: SparkSession, path: String, nFiles: Int): String =
-    stagedMulti.getOrElseUpdate((graft.DirKeys.canonical(path), nFiles), {
-      val df = s.read.parquet(path)
+  private def pacedDir(s: SparkSession, d: String, table: String, nFiles: Int): String =
+    graft.Scratch.dir("paced", d, s"$table.parquet", nFiles.toString) { t =>
+      val df = s.read.parquet(s"$d/$table.parquet")
       val orderCol = if (df.columns.contains("ts")) "ts" else df.columns.head
-      val t = java.nio.file.Files.createTempDirectory("graft_stream_paced_")
-      t.toFile.deleteOnExit()
       df.repartitionByRange(nFiles, col(orderCol)).sortWithinPartitions(orderCol)
         .write.mode("overwrite").parquet(t.toString)
       // range partition i holds the i-th ascending key range and writes
@@ -101,13 +89,12 @@ object StreamOps {
         java.nio.file.Files.setLastModifiedTime(p,
           java.nio.file.attribute.FileTime.fromMillis(base + i * 10000L))
       }
-      t.toString
-    })
+    }.toString
 
   private def eventsStreamPaced(s: SparkSession, d: String, nFiles: Int,
                                 maxFilesPerTrigger: Int): DataFrame = {
     graft.Tables.admitNanos(s, s"$d/events.parquet")
-    val dir = pacedDir(s, s"$d/events.parquet", nFiles)
+    val dir = pacedDir(s, d, "events", nFiles)
     val schema = graft.Tables.schemaOf(s, dir)
     val raw = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
@@ -189,25 +176,22 @@ object StreamOps {
       case None            => bytesFor(d, table) > paceBytes
     }
 
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  /** Session settings scoped to one stateful query's start. Stateful
+    * operators pay a fixed per-partition-per-batch state-store cost
+    * (open/commit/snapshot), so micro-batches want FAR fewer partitions
+    * than batch shuffles: the count is sized to per-TRIGGER volume (see
+    * partsFor), not corpus volume, and is pinned into the checkpoint at
+    * first run. */
+  private def stateConf(parts: Int, rocksdb: Boolean): Seq[(String, String)] =
+    ("spark.sql.shuffle.partitions" -> parts.toString) +:
+      (if (rocksdb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil)
 
   private def runToMemory(df: DataFrame, mode: String, parts: Int = 8,
                           rocksdb: Boolean = false): String = {
     val name = "graft_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stateful operators pay a fixed per-partition-per-batch state-store
-    // cost (open/commit/snapshot), so micro-batches want FAR fewer
-    // partitions than batch shuffles — the partition count is sized to
-    // per-TRIGGER volume (see partsFor), not corpus volume, and is
-    // pinned into the checkpoint at first run. Scope the override to
-    // this query's start.
-    val s = df.sparkSession
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(ProviderKey)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    if (rocksdb) s.conf.set(ProviderKey, RocksDbProvider)
-    try {
+    graft.GraftSession.withConf(df.sparkSession, stateConf(parts, rocksdb): _*) {
       df.writeStream
         .format("memory")
         .queryName(name)
@@ -215,12 +199,6 @@ object StreamOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      if (rocksdb) prevProv match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None    => s.conf.unset(ProviderKey)
-      }
     }
     name
   }
@@ -439,8 +417,7 @@ object StreamOps {
     import graft.operators.Dedup
     import graft.operators.Dedup.Features
     val minAgree = math.ceil(tau * Dedup.MinhashPerms).toInt
-    val work = java.nio.file.Files.createTempDirectory("graft_neardup_")
-    work.toFile.deleteOnExit()
+    val work = graft.Scratch.fresh("neardup")
     val sigDir = work.resolve("seen_sigs").toString
     val outDir = work.resolve("kept").toString
     // seed the state table empty with the signature schema; every
@@ -449,9 +426,8 @@ object StreamOps {
     val seed = s.range(0).select(col("id").as("doc_id") +: sigCols: _*)
     seed.write.mode("overwrite").parquet(sigDir)
 
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", partsFor(d, "documents").toString)
-    try {
+    graft.GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> partsFor(d, "documents").toString) {
       tableStream(s, d, "documents")
         .select(col("doc_id"), col("text"))
         .writeStream
@@ -482,18 +458,9 @@ object StreamOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.read.parquet(outDir).orderBy("doc_id")
   }
-
-  // persistent state dirs for the streaming training-corpus maintainer,
-  // one per state generation key (canonical sfDir digest + corpus
-  // stamp): a regenerated documents.parquet gets a FRESH work dir +
-  // checkpoint in the same JVM, matching the rolled state-table
-  // namespace (same lifecycle rationale as mergeWorkDirs), and every
-  // spelling of one dir shares the one checkpoint its state belongs to
-  private val corpusWorkDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Bucket count of the maintainer's state tables — matches
     * [[graft.operators.LshIndex.Buckets]]; at 100 TB a deployment sizes
@@ -697,9 +664,10 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val st = graft.Persisted(s, graft.Persisted.CorpusState, d)
     val stateKinds = CorpusStateKinds.map(_._1)
-    val work = corpusWorkDirs.getOrElseUpdate(st.key, {
-      val t = java.nio.file.Files.createTempDirectory("graft_stream_corpus_")
-      t.toFile.deleteOnExit()
+    // one work dir + checkpoint per corpus generation, as for the state
+    // tables: a regenerated documents.parquet gets fresh ones in the same
+    // JVM, and every spelling of one dir shares its checkpoint
+    val work = graft.Scratch.dir("corpus", d, "documents.parquet") { t =>
       val w = t.toString
       // assembly-only state (read once, at the end — no per-batch probe
       // joins): plain parquet, seeded empty with its schema as the
@@ -742,21 +710,17 @@ object StreamOps {
             graft.Tables.documents(s, d).filter(col("source") === "src0"), 8)
           .select(col("h")).distinct(), "bench", "h")
       }
-      w
-    })
+    }.toString
     // a warm call trusts the tables: finish any compaction swap that
     // crashed between its DROP and RENAME before reading them
     st.recover(stateKinds)
-    val dir = pacedDir(s, s"$d/documents.parquet", nFiles)
+    val dir = pacedDir(s, d, "documents", nFiles)
     val schema = graft.Tables.schemaOf(s, dir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val OvrKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevOvr = s.conf.get(OvrKey)
-    s.conf.set("spark.sql.shuffle.partitions", partsFor(d, "documents").toString)
     // dynamic: writeTbl's overwrite-insertInto must replace ONLY the
     // batch's own partition — static mode would truncate the whole table
-    s.conf.set(OvrKey, "dynamic")
-    try {
+    graft.GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> partsFor(d, "documents").toString,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
         .writeStream
         .option("checkpointLocation", s"$work/ckpt")
@@ -879,9 +843,6 @@ object StreamOps {
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set(OvrKey, prevOvr)
     }
     // -- final assembly: the identical relational tail, corpus-scan-free --
     val losers = Dedup.resolveClusters(
@@ -901,15 +862,6 @@ object StreamOps {
         floor((col("end_off") - col("n_tokens")) / lit(seqLen.toLong)).as("chunk_first"))
       .orderBy("doc_id")
   }
-
-  // persistent CDC work dir (feed + checkpoint + applied emissions) per
-  // (sfDir, orders stamp): the state store is seeded ONCE per JVM and
-  // every later pass re-opens it from the checkpoint (same lifecycle
-  // rationale as stagedDirs; on a cluster this directory is durable
-  // storage). A regenerated orders.parquet rolls the key — a checkpoint
-  // seeded from the old rows must not absorb the new change feed.
-  private val mergeWorkDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   /** The per-key CDC fold shared by every apply pass: collapse this
     * batch's ops for one key onto the current state row. Seeded keys
@@ -976,11 +928,8 @@ object StreamOps {
     val prevBatch: Long =
       if (!hasOut) -1L
       else s.read.parquet(outDir).agg(max(col("batch_id"))).head.getLong(0)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(ProviderKey)
-    s.conf.set("spark.sql.shuffle.partitions", partsFor(d, "orders").toString)
-    if (useRocksDb(d, "orders")) s.conf.set(ProviderKey, RocksDbProvider)
-    val query = try {
+    val query = graft.GraftSession.withConf(s,
+        stateConf(partsFor(d, "orders"), useRocksDb(d, "orders")): _*) {
       val q = out.writeStream
         .option("checkpointLocation", ckpt)
         .outputMode("append")
@@ -992,12 +941,6 @@ object StreamOps {
         .start()
       q.awaitTermination()
       q
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None    => s.conf.unset(ProviderKey)
-      }
     }
     val updated = query.recentProgress.iterator
       .flatMap(p => Option(p.stateOperators).toSeq.flatten)
@@ -1039,18 +982,16 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val orders = graft.Tables.orders(s, d)
     val changes = graft.operators.Cdc.changeFeed(orders)
-    var fresh = false
-    val workDir = mergeWorkDirs.getOrElseUpdate((d,
-      graft.DirKeys.contentStamp(
-        java.nio.file.Paths.get(d, "orders.parquet").toString)), {
-      fresh = true
-      val t = java.nio.file.Files.createTempDirectory("graft_cdc_work")
-      t.toFile.deleteOnExit()
-      t.toString
-    })
-    // the change feed lands as files exactly once; a warm pass re-opens
-    // the checkpointed store, finds no new files, and does no work
-    cdcApplyPass(s, d, workDir, if (fresh) Some(changes) else None)
+    // one work dir (feed + checkpoint + applied emissions) per orders
+    // generation: the change feed lands as files once, and the store is
+    // seeded once; a warm pass re-opens the checkpoint, finds no new
+    // files, and does no work. A regenerated orders.parquet gets a fresh
+    // dir: a checkpoint seeded from the old rows must not absorb the new
+    // feed. On a cluster this dir is durable storage.
+    val workDir = graft.Scratch.dir("cdc", d, "orders.parquet") { w =>
+      changes.coalesce(1).write.mode("append").parquet(s"$w/feed")
+    }.toString
+    cdcApplyPass(s, d, workDir, None)
     val applied = s.read.parquet(s"$workDir/applied")
     // latest emission per key (single-feed runs have unique keys; the
     // window is over duplicate-emission clusters only)

@@ -179,6 +179,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"probe set not pushed as a partition filter: ${scan.partitionFilters}")
     val selected = scan.selectedPartitions.partitionCount
     assert(selected <= 9, s"radius-1 probe should read <= 9 partitions, read $selected")
+
+    // the index is the persisted IVF family's lsh8 kind: a second call
+    // reuses it without writing, and a lost sentinel rebuilds it whole
+    val ivf = Persisted(spark, Persisted.Ivf, sf)
+    def written: Set[(String, Long)] = {
+      val walk = java.nio.file.Files.walk(ivf.dir("lsh8"))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => (p.toString, java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSet
+      } finally walk.close()
+    }
+    val built = written
+    assert(Similarity.knnLshIndexed(spark, sf, 0L, 10).collect().toSeq === inflight)
+    assert(written === built, "a warm call rewrote the index")
+    java.nio.file.Files.delete(ivf.sentinel(Seq("lsh8")))
+    assert(Similarity.knnLshIndexed(spark, sf, 0L, 10).collect().toSeq === inflight)
+    // every part file name carries the writing job's id
+    assert(written.map(_._1).intersect(built.map(_._1)).forall(!_.contains("part-")))
+    assert(java.nio.file.Files.exists(ivf.sentinel(Seq("lsh8"))))
+    // q61b: radius 8 probes all 256 buckets ≡ exhaustive search
+    assert(Similarity.knnLshIndexed(spark, sf, 0L, 10, probeRadius = 8)
+      .select("vec_id", "sim").collect().toSeq ===
+      Similarity.knnBrute(spark, sf, 0L, 10).collect().toSeq)
   }
 
   test("knnIvfIndexed: identical to in-flight knnIvfKmeans; probe set prunes CELL partitions") {

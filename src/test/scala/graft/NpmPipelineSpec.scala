@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.NpmPipeline
-import graft.sources.{HttpRegistry, LocalRegistry, Registry, SyntheticRegistry}
+import graft.sources.{HttpRegistry, LocalRegistry, Registry}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -150,17 +150,6 @@ class NpmPipelineSpec extends AnyFunSuite {
     assert(viaHttp.count() === 3L)
     assert(viaHttp.exceptAll(viaLocal).count() === 0L)
     assert(viaLocal.exceptAll(viaHttp).count() === 0L)
-  }
-
-  test("clientFromConf gates the live client behind graft.registry.mode") {
-    assert(Registry.clientFromConf(spark).isInstanceOf[SyntheticRegistry])
-    spark.conf.set("graft.registry.mode", "http")
-    spark.conf.set("graft.registry.url", "https://mirror.internal.test")
-    try assert(Registry.clientFromConf(spark).isInstanceOf[HttpRegistry])
-    finally {
-      spark.conf.unset("graft.registry.mode")
-      spark.conf.unset("graft.registry.url")
-    }
   }
 
   test("full reference dataflow on the CUSTOM DSv2 source: gz → throttle → enrich → counts") {

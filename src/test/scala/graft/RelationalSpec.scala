@@ -7,6 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class RelationalSpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
 
+  test("asofJoin: an event with no order at or before ts keeps its row, with a null asof_orderdate") {
+    import spark.implicits._
+    import java.time.{LocalDate, LocalDateTime}
+    val t = java.nio.file.Files.createTempDirectory("graft_asof_spec_")
+    try {
+      val at = LocalDateTime.parse("2024-01-03T12:00:00")
+      // user 10 has an order before ts; user 20 only one after; user 30 none
+      Seq((1L, 10L, at), (2L, 20L, at), (3L, 30L, at)).toDF("event_id", "user_id", "ts")
+        .coalesce(1).write.parquet(t.resolve("events.parquet").toString)
+      Seq((10L, LocalDate.parse("2024-01-01")), (10L, LocalDate.parse("2024-01-05")),
+          (20L, LocalDate.parse("2024-02-01"))).toDF("o_custkey", "o_orderdate")
+        .coalesce(1).write.parquet(t.resolve("orders.parquet").toString)
+      val got = Relational.asofJoin(spark, t.toString)
+        .select(col("event_id"), col("asof_orderdate").cast("string"))
+        .as[(Long, String)].collect().toSeq
+      assert(got === Seq((1L, "2024-01-01"), (2L, null), (3L, null)))
+    } finally Persisted.delete(t)
+  }
+
   test("aggPricing groups to the 6 flag/status combinations") {
     val rows = Relational.aggPricing(spark, sf).collect()
     assert(rows.length === 6)

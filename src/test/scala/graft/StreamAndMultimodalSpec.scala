@@ -9,12 +9,31 @@ class StreamAndMultimodalSpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
 
   test("streaming windowed counts equal the batch equivalent") {
-    val streamed = StreamOps.windowedCounts(spark, sf)
-    val batch = Tables.events(spark, sf)
-      .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    assert(streamed.count() === batch.count())
-    assert(streamed.exceptAll(batch).count() === 0L)
+    def assertBatch(d: String): Unit = {
+      val streamed = StreamOps.windowedCounts(spark, d)
+      val batch = Tables.events(spark, d)
+        .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      assert(streamed.count() === batch.count())
+      assert(streamed.exceptAll(batch).count() === 0L)
+    }
+    assertBatch(sf)
+    // a single-file source overwritten in a live JVM: the staged copy the
+    // stream reads must follow the new rows
+    val t = java.nio.file.Files.createTempDirectory("graft_regen_spec_")
+    WarehouseGC.registerScratchPurge(spark, t.toString)
+    val events = t.resolve("events.parquet")
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "events.parquet"), events)
+      assertBatch(t.toString)
+      val tmp = t.resolve("regen").toString
+      spark.read.parquet(sf + "/events.parquet").filter(col("event_id") % 3 =!= 0)
+        .coalesce(1).write.parquet(tmp)
+      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+        .filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+      java.nio.file.Files.move(part, events, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assertBatch(t.toString)
+    } finally Persisted.delete(t)
   }
 
   test("windowed counts are invariant to micro-batch boundaries (trigger pacing)") {

@@ -77,6 +77,24 @@ class StreamPacingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fed.get() === 0L)
       assert(respelled === batchOut)
     } finally spark.streams.removeListener(listener)
+
+    // a corpus regenerated in place in a live JVM: the paced re-split,
+    // work dir and checkpoint all follow the new file, so the maintainer
+    // replays the new documents into fresh state
+    val t = java.nio.file.Files.createTempDirectory("graft_regen_spec_")
+    WarehouseGC.registerScratchPurge(spark, t.toString)
+    val docs = t.resolve("documents.parquet").toString
+    try {
+      val src = spark.read.parquet(sf + "/documents.parquet")
+      src.write.parquet(docs)
+      assert(StreamOps.trainingCorpusStream(spark, t.toString).collect().map(_.toSeq) === batchOut)
+      src.filter(col("doc_id") % 3 =!= 0).write.mode("overwrite").parquet(docs)
+      val regenerated = graft.operators.Pipeline.trainingCorpus(spark, t.toString)
+        .collect().map(_.toSeq)
+      assert(regenerated !== batchOut)
+      assert(StreamOps.trainingCorpusStream(spark, t.toString).collect().map(_.toSeq) ===
+        regenerated)
+    } finally Persisted.delete(t)
   }
 
   test("maintainer's cross-batch probe plans ZERO exchange on the accumulated-state side") {

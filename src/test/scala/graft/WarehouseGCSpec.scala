@@ -213,11 +213,8 @@ class WarehouseGCSpec extends AnyFunSuite {
     // list of provably non-warehouse uses. A new prefix fails here
     // until someone classifies it.
     val nonPersisted = Map(
-      // java.nio createTempDirectory scratch roots — never in the warehouse
-      "graft_ann_" -> "temp dir (Similarity bucketed-ANN staging)",
-      "graft_cdc_" -> "temp dir (stream-merge checkpoint/work)",
-      "graft_neardup_" -> "temp dir (q38 suppression work dir)",
-      "graft_stream_" -> "temp dirs (paced-replay staging, corpus work dir)",
+      // graft.Scratch temp dirs — never in the warehouse, deleted at exit
+      "graft_scratch_" -> "temp dirs (stream staging, paced re-splits, work dirs)",
       // session-scoped temp views — die with the session, no disk
       "graft_cust_" -> "temp view (q27 EXISTS subquery)",
       "graft_orders_" -> "temp view (q26/q27 subqueries)",
